@@ -20,12 +20,76 @@ probe_streaming_state.py):
   not leak into batch latency, so long-running streams are safe. The
   keys-present-per-batch count, not events/batch, is the capacity
   number to size against.
+* Small batches are dominated by a PER-TASK fixed cost instead. Every
+  Python task starts with `importlib.invalidate_caches()` (pyspark's
+  `worker_util.setup_spark_files`); workers import pyspark from
+  `$SPARK_HOME/python/lib/pyspark.zip`, which leaves one zipimporter per
+  pyspark subpackage (12) in `sys.path_importer_cache`, and on CPython
+  3.10/3.11 each of them re-reads the whole archive directory: 100–120 ms
+  a task in a lone worker, 260–420 ms with 4 workers at once — ~0.7 s
+  of a ~1.6 s 8-task micro-batch on 4 cores. `_apply_with_state` makes
+  the first update() call in each worker install `_zip_stat_installer`'s
+  stat-checked re-read, so a reused worker pays the cost once. A worker
+  replaced after Spark's idle-worker timeout pays it once more, on its
+  first task.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+
+def _zip_stat_installer():
+    """Return the worker-side installer of a stat-checked
+    `zipimport.zipimporter.invalidate_caches`.
+
+    The installer is a nested function, so cloudpickle ships it by value
+    inside each UDF and executors never import this package. Once
+    installed in a process, `invalidate_caches()` re-reads an archive's
+    directory only when the archive's (st_mtime_ns, st_size, st_ino)
+    changed since the last read and otherwise reuses the directory
+    already read (`zipimport._zip_directory_cache`), so a rewritten
+    archive is still picked up. The installer returns True when it
+    installed; it is idempotent, and a no-op returning False on Python
+    >= 3.12 and wherever zipimport lacks the 3.10/3.11 internals
+    (`_read_directory`, `_zip_directory_cache`).
+    """
+
+    def install() -> bool:
+        import sys
+        import zipimport as _zi
+
+        orig = _zi.zipimporter.invalidate_caches
+        if (sys.version_info >= (3, 12)
+                or getattr(orig, "stat_checked", False)
+                or not hasattr(_zi, "_read_directory")
+                or not hasattr(_zi, "_zip_directory_cache")):
+            return False
+        import os
+
+        read_at = {}  # archive -> stat signature of its last read
+
+        def invalidate_caches(self):
+            try:
+                st = os.stat(self.archive)
+                sig = (st.st_mtime_ns, st.st_size, st.st_ino)
+            except OSError:
+                sig = None
+            files = _zi._zip_directory_cache.get(self.archive)
+            if sig is not None and files is not None \
+                    and read_at.get(self.archive) == sig:
+                self._files = files
+                return
+            orig(self)
+            if sig is not None:
+                read_at[self.archive] = sig
+
+        invalidate_caches.stat_checked = True
+        _zi.zipimporter.invalidate_caches = invalidate_caches
+        return True
+
+    return install
 
 
 def _sized_group(df: DataFrame, *keys):
@@ -60,6 +124,31 @@ def _sized_group(df: DataFrame, *keys):
     return df.groupBy(*keys)
 
 
+def _apply_with_state(df: DataFrame, keys, update, out_schema: str,
+                      state_schema: str, mode: str) -> DataFrame:
+    """`applyInPandasWithState` (no timeout) on the `_sized_group` of
+    `df` by `keys` (one column name or a tuple of them), with `update`
+    wrapped so its first call in each task installs the stat-checked
+    zip re-read (module DEPLOYMENT NOTES). The wrapper closes over
+    nested functions only, so it ships by value like `update` itself.
+    """
+    if isinstance(keys, str):
+        keys = (keys,)
+    install = _zip_stat_installer()
+    pending = [True]
+
+    def update_in_worker(key, pdfs, state):
+        if pending:
+            pending.clear()
+            install()
+        return update(key, pdfs, state)
+
+    return _sized_group(df, *keys).applyInPandasWithState(
+        update_in_worker, outputStructType=out_schema,
+        stateStructType=state_schema, outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout)
+
+
 def running_user_stats(events: DataFrame) -> DataFrame:
     """Per-user running totals maintained as explicit group state.
 
@@ -84,16 +173,10 @@ def running_user_stats(events: DataFrame) -> DataFrame:
         yield _pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "total_value": [total]})
 
-    return (
-        _sized_group(events, "user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType="user_id long, n_events long, total_value double",
-            stateStructType="n long, total double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        events, "user_id", update,
+        "user_id long, n_events long, total_value double",
+        "n long, total double", "update")
 
 
 def running_user_stats_tws(events: DataFrame) -> DataFrame:
@@ -114,6 +197,8 @@ def running_user_stats_tws(events: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor, StatefulProcessorHandle)
 
+    install = _zip_stat_installer()
+
     class RunningStats(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle):
             self._state = handle.getValueState(
@@ -122,6 +207,7 @@ def running_user_stats_tws(events: DataFrame) -> DataFrame:
         def handleInputRows(self, key, rows, timerValues):
             import pandas as _pd
 
+            install()
             got = self._state.get()
             n, total = got if got is not None else (0, 0.0)
             for pdf in rows:
@@ -197,19 +283,10 @@ def streaming_gapfill_locf(events: DataFrame, step_s: int = 3600) -> DataFrame:
         yield _pd.DataFrame(
             rows, columns=["user_id", "bucket", "value", "is_gap"])
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        _sized_group(events, "user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType="user_id long, bucket long, value double, "
-                             "is_gap int",
-            stateStructType="last_bucket long, last_value double",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        events, "user_id", update,
+        "user_id long, bucket long, value double, is_gap int",
+        "last_bucket long, last_value double", "append")
 
 
 def streaming_transitions(events: DataFrame) -> DataFrame:
@@ -257,17 +334,10 @@ def streaming_transitions(events: DataFrame) -> DataFrame:
                 "n": [counts[k] for k in ks],
             })
 
-    return (
-        _sized_group(events, "user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=(
-                "user_id long, from_type string, to_type string, n long"),
-            stateStructType="ts long, event_id long, t string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        events, "user_id", update,
+        "user_id long, from_type string, to_type string, n long",
+        "ts long, event_id long, t string", "append")
 
 
 def streaming_time_weighted(events: DataFrame) -> DataFrame:
@@ -331,20 +401,11 @@ def streaming_time_weighted(events: DataFrame) -> DataFrame:
             "wsum_e6": [str(num)],
         })
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        _sized_group(events, "user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=(
-                "key long, n_intervals long, span_us long, wsum_e6 string"),
-            stateStructType=("last_ts long, last_eid long, last_v6 long, "
-                             "n long, den long, num string"),
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        events, "user_id", update,
+        "key long, n_intervals long, span_us long, wsum_e6 string",
+        "last_ts long, last_eid long, last_v6 long, "
+        "n long, den long, num string", "update")
 
 
 def streaming_session_paths(
@@ -406,18 +467,10 @@ def streaming_session_paths(
                 "n_sessions": [counts[k] for k in ks],
             })
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        _sized_group(events, "user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType="path string, depth int, n_sessions long",
-            stateStructType="last_ts long, d int, path string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        events, "user_id", update,
+        "path string, depth int, n_sessions long",
+        "last_ts long, d int, path string", "append")
 
 
 def streaming_expanding_zscore(events: DataFrame) -> DataFrame:
@@ -480,19 +533,10 @@ def streaming_expanding_zscore(events: DataFrame) -> DataFrame:
                 "zraw": _pd.array(out_z, dtype="float64"),
             })
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        _sized_group(events, "user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=(
-                "event_id long, key long, n_prev long, zraw double"),
-            stateStructType="n long, sx string, sxx string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        events, "user_id", update,
+        "event_id long, key long, n_prev long, zraw double",
+        "n long, sx string, sxx string", "append")
 
 
 def streaming_conversion_lag(
@@ -543,16 +587,10 @@ def streaming_conversion_lag(
                 {"u": [key[0]], "f_us": [f_us],
                  "lag_us": _pd.array([lag], dtype="Int64")})
 
-    return (
-        _sized_group(events, "user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType="u long, f_us long, lag_us long",
-            stateStructType="f_us long, conv long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        events, "user_id", update,
+        "u long, f_us long, lag_us long",
+        "f_us long, conv long", "update")
 
 
 def streaming_new_vs_returning(
@@ -600,16 +638,10 @@ def streaming_new_vs_returning(
         else:
             state.update((first_p, last_p))
 
-    return (
-        _sized_group(events, "user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType="user_id long, period long, is_new boolean",
-            stateStructType="first_p long, last_p long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        events, "user_id", update,
+        "user_id long, period long, is_new boolean",
+        "first_p long, last_p long", "append")
 
 
 def streaming_rfm_state(orders: DataFrame) -> DataFrame:
@@ -659,17 +691,10 @@ def streaming_rfm_state(orders: DataFrame) -> DataFrame:
             "frequency": [freq], "mon": [str(total)],
         })
 
-    return (
-        _sized_group(orders, "o_custkey")
-        .applyInPandasWithState(
-            update,
-            outputStructType="cust long, last_order_us long, "
-                             "frequency long, mon string",
-            stateStructType="last_us long, freq long, mon string",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        orders, "o_custkey", update,
+        "cust long, last_order_us long, frequency long, mon string",
+        "last_us long, freq long, mon string", "update")
 
 
 def streaming_m4(events: DataFrame, bucket_us: int = 3_600_000_000
@@ -726,20 +751,12 @@ def streaming_m4(events: DataFrame, bucket_us: int = 3_600_000_000
         "bucket",
         F.floor(F.unix_micros(F.col("ts").cast("timestamp"))
                 / F.lit(int(bucket_us))).cast("long"))
-    return (
-        _sized_group(keyed, "user_id", "bucket")
-        .applyInPandasWithState(
-            update,
-            outputStructType="user_id long, bucket long, n long, "
-                             "v_first double, v_last double, "
-                             "v_min double, v_max double",
-            stateStructType="n long, v_first double, v_last double, "
-                            "k_first string, k_last string, "
-                            "v_min double, v_max double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        keyed, ("user_id", "bucket"), update,
+        "user_id long, bucket long, n long, v_first double, v_last double, "
+        "v_min double, v_max double",
+        "n long, v_first double, v_last double, "
+        "k_first string, k_last string, v_min double, v_max double", "update")
 
 
 def streaming_ewma(
@@ -791,16 +808,10 @@ def streaming_ewma(
             })
         state.update((last_seq, str(e) if e is not None else ""))
 
-    return (
-        _sized_group(rows, key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType="y long, day long, rev double, ewma double",
-            stateStructType="last_seq long, e string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        rows, key_col, update,
+        "y long, day long, rev double, ewma double",
+        "last_seq long, e string", "append")
 
 
 def streaming_cusum(
@@ -862,16 +873,10 @@ def streaming_cusum(
             })
         state.update((last_seq, repr(s)))
 
-    return (
-        _sized_group(rows.withColumn("_k", F.lit(0)), "_k")
-        .applyInPandasWithState(
-            update,
-            outputStructType="day long, rev double, cusum double, flag int",
-            stateStructType="last_seq long, s string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        rows.withColumn("_k", F.lit(0)), "_k", update,
+        "day long, rev double, cusum double, flag int",
+        "last_seq long, s string", "append")
 
 
 def streaming_holt(
@@ -943,17 +948,11 @@ def streaming_holt(
                       str(lv) if lv is not None else "",
                       str(tr) if tr is not None else ""))
 
-    return (
-        _sized_group(rows, key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=("y long, day long, rev double, level double,"
-                              " trend double, forecast double"),
-            stateStructType="last_seq long, l string, b string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        rows, key_col, update,
+        "y long, day long, rev double, level double,"
+        " trend double, forecast double",
+        "last_seq long, l string, b string", "append")
 
 
 def streaming_sprt(
@@ -1009,14 +1008,8 @@ def streaming_sprt(
             yield _pd.DataFrame(out)
         state.update((last_seq, str(llr)))
 
-    return (
-        _sized_group(rows.withColumn("_k", F.lit(0)), "_k")
-        .applyInPandasWithState(
-            update,
-            outputStructType=("day long, n_users long, n_converted long, "
-                              "llr double, decision string"),
-            stateStructType="last_seq long, llr string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _apply_with_state(
+        rows.withColumn("_k", F.lit(0)), "_k", update,
+        "day long, n_users long, n_converted long, "
+        "llr double, decision string",
+        "last_seq long, llr string", "append")

@@ -1485,9 +1485,11 @@ def test_stateful_ops_size_state_partitions(spark, events_stream):
     """r10 verdict item 5: a session left at Spark's untouched 200
     default gets a machine-derived state-partition count BEFORE the
     stateful plan is built (the state store freezes the count at the
-    first micro-batch); any explicitly sized session is respected."""
+    first micro-batch); building any of the 15 stateful ops on an
+    explicitly sized session leaves that size alone."""
     import os
 
+    from gpu_bdb_spark.streaming import stateful
     from gpu_bdb_spark.streaming.stateful import streaming_transitions
 
     _, stream = events_stream
@@ -1502,7 +1504,40 @@ def test_stateful_ops_size_state_partitions(spark, events_stream):
         assert spark.conf.get(key) == str(max(8, 2 * cores))
 
         spark.conf.set(key, "48")
-        streaming_transitions(inp)
-        assert spark.conf.get(key) == "48"  # explicit sizing respected
+        ops = {n for n in dir(stateful)
+               if n.startswith(("running_", "streaming_"))}
+        assert ops == set(_STATEFUL_BUILDS) and len(ops) == 15
+        for name, build in _STATEFUL_BUILDS.items():
+            build(getattr(stateful, name), stream)
+            assert spark.conf.get(key) == "48", name  # explicit size kept
     finally:
         spark.conf.set(key, saved)
+
+
+def _alias(stream, **cols):
+    return stream.select(*(F.col(src).alias(dst)
+                           for dst, src in cols.items()))
+
+
+#: Every stateful op, built from the events stream (columns aliased to
+#: the op's input schema where it has its own).
+_STATEFUL_BUILDS = {
+    **{name: (lambda op, s: op(s)) for name in (
+        "running_user_stats", "running_user_stats_tws",
+        "streaming_gapfill_locf", "streaming_transitions",
+        "streaming_time_weighted", "streaming_session_paths",
+        "streaming_expanding_zscore", "streaming_conversion_lag",
+        "streaming_new_vs_returning", "streaming_m4")},
+    "streaming_rfm_state": lambda op, s: op(_alias(
+        s.withColumn("d", F.col("ts").cast("date")), o_custkey="user_id",
+        o_orderdate="d", o_totalprice="value")),
+    "streaming_ewma": lambda op, s: op(_alias(
+        s, y="user_id", day="event_id", rev="value")),
+    "streaming_holt": lambda op, s: op(_alias(
+        s, y="user_id", day="event_id", rev="value")),
+    "streaming_cusum": lambda op, s: op(
+        _alias(s, day="event_id", rev="value"), 1.0),
+    "streaming_sprt": lambda op, s: op(
+        _alias(s, day="event_id", n_users="user_id",
+               n_converted="event_id"), "0.1", "-0.1", "2", "-2"),
+}

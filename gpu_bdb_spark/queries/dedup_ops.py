@@ -153,14 +153,21 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                              threshold=0.6, hashed_posting=hashed)
 
 
+#: Band collisions a candidate pair needs before the exact verify, in
+#: both LSH entries and both of their oracles (one value, so the
+#: operator and its oracle cannot drift apart).
+LSH_MIN_BAND_MATCHES = 2
+
+
 def _lsh_verified_ctes(num_hashes: int = 32, bands: int = 16,
                        threshold_num: int = 3,
-                       threshold_den: int = 5,
-                       min_band_matches: int = 2) -> str:
+                       threshold_den: int = 5, *,
+                       min_band_matches: int) -> str:
     """CTE chain (no WITH keyword) replaying the ENTIRE portable LSH
-    pipeline — signatures, banding, candidate join, exact integer
-    verify — ending in a `pairs(id_1, id_2, jaccard)` CTE. Shared by
-    the pair entry and the cluster composition below. Every
+    pipeline — signatures, banding, candidate join with the
+    `min_band_matches` prefilter, exact integer verify — ending in a
+    `pairs(id_1, id_2, jaccard)` CTE. Shared by the pair entry and the
+    cluster composition below. Every
     multiply-referenced CTE is AS MATERIALIZED (DuckDB re-inlines plain
     CTEs per reference — at sf1 that turned this chain pathological;
     SCALE.md round-8/9 oracle-cost lessons)."""
@@ -233,11 +240,12 @@ def _lsh_verified_oracle(num_hashes: int = 32, bands: int = 16) -> str:
     gate is deterministic at any SF (LSH recall is the operator's
     contract, not a hash-compare hazard; equality/recall vs the
     exhaustive join is pinned separately in tests/test_dedup.py).
-    Round 11: the cand CTE replays the min_band_matches >= 2
-    count-prefilter (VERDICT r10 item 3) — GROUP BY + HAVING instead
-    of DISTINCT, matching the operator stage for stage."""
-    return ("WITH " + _lsh_verified_ctes(num_hashes, bands)
-            + "\nSELECT id_1, id_2, jaccard FROM pairs")
+    The cand CTE replays the operator's band-collision count
+    prefilter (`LSH_MIN_BAND_MATCHES`) — GROUP BY + HAVING instead of
+    DISTINCT, matching the operator stage for stage."""
+    ctes = _lsh_verified_ctes(num_hashes, bands,
+                              min_band_matches=LSH_MIN_BAND_MATCHES)
+    return "WITH " + ctes + "\nSELECT id_1, id_2, jaccard FROM pairs"
 
 
 @register("dedup_lsh_verified", oracle=_lsh_verified_oracle(),
@@ -262,7 +270,8 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
                    hint_broadcast=False)
     return minhash_lsh_verified_portable(
         d, "text", "doc_id", num_hashes=32, bands=16,
-        threshold_num=3, threshold_den=5, min_band_matches=2)
+        threshold_num=3, threshold_den=5,
+        min_band_matches=LSH_MIN_BAND_MATCHES)
 
 
 @register("dedup_simhash", tags=("dedup", "simhash"))
@@ -436,7 +445,8 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_CLUSTERS_LSH_ORACLE = (
-    "WITH RECURSIVE " + _lsh_verified_ctes() + r""",
+    "WITH RECURSIVE "
+    + _lsh_verified_ctes(min_band_matches=LSH_MIN_BAND_MATCHES) + r""",
 edges AS (SELECT id_1 AS a, id_2 AS b FROM pairs
           UNION ALL SELECT id_2, id_1 FROM pairs),
 reach(id, r) AS (
@@ -482,7 +492,8 @@ def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                    hint_broadcast=False)
     pairs = minhash_lsh_verified_portable(
         d, "text", "doc_id", num_hashes=32, bands=16,
-        threshold_num=3, threshold_den=5, min_band_matches=2)
+        threshold_num=3, threshold_den=5,
+        min_band_matches=LSH_MIN_BAND_MATCHES)
     # Materialize the (small) verified pair set before CC: the star
     # loop references it from several subtrees, and re-executing the
     # candidate+verify pipeline per reference both doubles peak

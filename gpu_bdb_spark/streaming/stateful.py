@@ -2,8 +2,27 @@
 (the arbitrary-state API the brief calls out for operators Spark's
 built-ins can't express).
 
-The closure is self-contained (ships by value; executors don't need this
-package on PYTHONPATH — same rule as operators/multimodal.py).
+FOLD CONTRACT. Each applyInPandasWithState twin is a pure per-key step
+`step(key, pdf, st) -> (new_st, out_or_None)` plus two per-op
+constants, all handed to `_apply_with_state`: `init`, the state tuple
+of a key that has no state yet, and `order`, the sort columns (None for
+the ops whose result does not depend on row order). Once per key per
+micro-batch the helper reads the state (or `init`), joins the key's
+Arrow chunks into ONE frame, sorts that frame once by `order`, calls
+`step`, writes `new_st` back and emits `out` unless it is empty. A
+step never touches GroupState, chunks or row order itself.
+
+ORDERING CONTRACT. Within a micro-batch the fold sees a key's rows in
+`order`. Across micro-batches the order-dependent twins assume
+non-decreasing event time per key: no row of a later micro-batch
+precedes a row of an earlier one for the same key. Replay and tailing
+sources satisfy it; out-of-order arrival needs a watermarking twin.
+`running_user_stats`, `streaming_rfm_state` and `streaming_m4` merge
+associatively and need no ordering at all.
+
+The step and the wrapper are self-contained (they ship by value;
+executors don't need this package on PYTHONPATH — same rule as
+operators/multimodal.py).
 
 DEPLOYMENT NOTES (measured at 100k keys × 50 micro-batches,
 probe_streaming_state.py):
@@ -14,12 +33,24 @@ probe_streaming_state.py):
   python-worker roundtrips per micro-batch forever (measured
   ~35 s/batch at 200 partitions vs ~25 s at 32 for the same 60k-row
   batches). Size it to the cluster BEFORE the first run.
-* Per-batch wall is dominated by PER-KEY pandas cost — update() runs
+* Per-batch wall is dominated by PER-KEY pandas cost — the step runs
   once per key PRESENT in the batch (~45k keys → ~25 s/batch), and is
   FLAT over the stream (early/late ratio 0.99): total state size does
   not leak into batch latency, so long-running streams are safe. The
   keys-present-per-batch count, not events/batch, is the capacity
   number to size against.
+* Spark packs a task's rows into Arrow batches of at most
+  `spark.sql.execution.arrow.maxRecordsPerBatch` rows (10,000 by
+  default) and cuts a key's rows at every batch boundary. Once a state
+  partition gets more rows than that in one micro-batch, any key whose
+  rows straddle a boundary arrives as several chunks, however few rows
+  it has (keys of 51–75 rows came in 2 chunks at a 100-row limit). The
+  fold joins a key's chunks before it sorts, so results do not depend
+  on the chunk size (pinned in tests/test_streaming.py with 2-row
+  chunks).
+* The state schema, output schema and output mode of every twin are
+  pinned in tests/test_streaming.py; the fold contract left them
+  unchanged, so checkpoints written before it still resume.
 * Small batches are dominated by a PER-TASK fixed cost instead. Every
   Python task starts with `importlib.invalidate_caches()` (pyspark's
   `worker_util.setup_spark_files`); workers import pyspark from
@@ -94,14 +125,14 @@ def _zip_stat_installer():
 
 def _sized_group(df: DataFrame, *keys):
     """groupBy for a stateful stage, sizing the state-store partition
-    count BEFORE the plan is built (r10 verdict item 5).
+    count BEFORE the plan is built.
 
     The stateful stage freezes its partition count from
     spark.sql.shuffle.partitions at the FIRST micro-batch (AQE-exempt,
     baked into the checkpoint); a session left at Spark's untouched 200
     default pays ~200 python-worker roundtrips per micro-batch forever
     (~35 s/batch vs ~25 s at 32 partitions for identical 60k-row
-    batches — the r15 probe). When the session still carries the "200"
+    batches; SCALE.md). When the session still carries the "200"
     default, derive the count from the machine: max(8, 2 × cores),
     cores from $SPARK_GRAFT_CPUS (the driver contract's core knob) or
     the context's defaultParallelism — scale-adaptive, not a constant.
@@ -124,29 +155,45 @@ def _sized_group(df: DataFrame, *keys):
     return df.groupBy(*keys)
 
 
-def _apply_with_state(df: DataFrame, keys, update, out_schema: str,
-                      state_schema: str, mode: str) -> DataFrame:
-    """`applyInPandasWithState` (no timeout) on the `_sized_group` of
-    `df` by `keys` (one column name or a tuple of them), with `update`
-    wrapped so its first call in each task installs the stat-checked
-    zip re-read (module DEPLOYMENT NOTES). The wrapper closes over
-    nested functions only, so it ships by value like `update` itself.
+def _apply_with_state(df: DataFrame, keys, step, out_schema: str,
+                      state_schema: str, mode: str, *, init,
+                      order) -> DataFrame:
+    """Run `step` under the module's fold contract: applyInPandasWithState
+    (no timeout) on the `_sized_group` of `df` by `keys` (one column
+    name or a tuple of them).
+
+    Per key per micro-batch: `st` is the state, or `init` when the key
+    has none; the key's chunks become one frame (a single chunk is used
+    as is); that frame is sorted by `order` unless it is None; then
+    `st, out = step(key, pdf, st)`, `state.update(st)`, and `out` is
+    emitted unless it is None or empty. The first call in each task
+    installs the stat-checked zip re-read (module DEPLOYMENT NOTES).
+    The wrapper closes over nested functions and plain values only, so
+    it ships by value like `step` itself.
     """
     if isinstance(keys, str):
         keys = (keys,)
     install = _zip_stat_installer()
     pending = [True]
 
-    def update_in_worker(key, pdfs, state):
+    def update(key, pdfs, state):
+        import pandas as pd
+
         if pending:
             pending.clear()
             install()
-        return update(key, pdfs, state)
+        chunks = list(pdfs)
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+        if order is not None:
+            pdf = pdf.sort_values(order)
+        st, out = step(key, pdf, state.get if state.exists else init)
+        state.update(st)
+        if out is not None and len(out):
+            yield out
 
     return _sized_group(df, *keys).applyInPandasWithState(
-        update_in_worker, outputStructType=out_schema,
-        stateStructType=state_schema, outputMode=mode,
-        timeoutConf=GroupStateTimeout.NoTimeout)
+        update, outputStructType=out_schema, stateStructType=state_schema,
+        outputMode=mode, timeoutConf=GroupStateTimeout.NoTimeout)
 
 
 def running_user_stats(events: DataFrame) -> DataFrame:
@@ -162,21 +209,18 @@ def running_user_stats(events: DataFrame) -> DataFrame:
     asserted in tests/test_streaming.py.
     """
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as _pd
 
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, total))
-        yield _pd.DataFrame(
+        n = st[0] + len(pdf)
+        total = st[1] + float(pdf["value"].fillna(0.0).sum())
+        return (n, total), _pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "total_value": [total]})
 
     return _apply_with_state(
-        events, "user_id", update,
+        events, "user_id", step,
         "user_id long, n_events long, total_value double",
-        "n long, total double", "update")
+        "n long, total double", "update", init=(0, 0.0), order=None)
 
 
 def running_user_stats_tws(events: DataFrame) -> DataFrame:
@@ -240,53 +284,48 @@ def streaming_gapfill_locf(events: DataFrame, step_s: int = 3600) -> DataFrame:
     state regardless of stream length (no buffered events, no
     watermark-bounded join).
 
-    Events inside a micro-batch are processed in (ts, event_id) order;
-    each bucket's representative is the max-(ts, event_id) event, so on
-    a drained stream the emitted rows are EXACTLY the batch operator's
-    output (pinned in tests/test_streaming.py — the strongest
-    batch≡stream contract: equality, not approximation).
+    Events fold in (ts, event_id) order; each bucket's representative
+    is the max-(ts, event_id) event, so on a drained stream the emitted
+    rows are EXACTLY the batch operator's output (pinned in
+    tests/test_streaming.py — the strongest batch≡stream contract:
+    equality, not approximation).
     """
 
     step_us = int(step_s) * 1_000_000
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as _pd
 
         rows = []
-        last_bucket, last_value = (
-            state.get if state.exists else (None, None))
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for ts, eid, v in zip(pdf["ts"], pdf["event_id"],
-                                  pdf["value"]):
-                us = int(_pd.Timestamp(ts).value // 1000)
-                b = us // step_us
-                v = None if _pd.isna(v) else float(v)
-                if last_bucket is None:
-                    rows.append((key[0], b, v, 0))
-                elif b == last_bucket:
-                    # same bucket: later (ts, event_id) wins. When the
-                    # bucket started in a PRIOR micro-batch the old row
-                    # is already emitted (append mode can't retract) —
-                    # emit the update; downstream keeps the latest per
-                    # (user, bucket). Within one batch it's a rewrite.
-                    if rows:
-                        rows[-1] = (key[0], b, v, 0)
-                    else:
-                        rows.append((key[0], b, v, 0))
+        last_bucket, last_value = st
+        for ts, v in zip(pdf["ts"], pdf["value"]):
+            b = int(_pd.Timestamp(ts).value // 1000) // step_us
+            v = None if _pd.isna(v) else float(v)
+            if last_bucket is None:
+                rows.append((key[0], b, v, 0))
+            elif b == last_bucket:
+                # same bucket: later (ts, event_id) wins. When the
+                # bucket started in a PRIOR micro-batch the old row
+                # is already emitted (append mode can't retract) —
+                # emit the update; downstream keeps the latest per
+                # (user, bucket). Within one batch it's a rewrite.
+                if rows:
+                    rows[-1] = (key[0], b, v, 0)
                 else:
-                    for gap in range(last_bucket + 1, b):
-                        rows.append((key[0], gap, last_value, 1))
                     rows.append((key[0], b, v, 0))
-                last_bucket, last_value = b, v
-        state.update((last_bucket, last_value))
-        yield _pd.DataFrame(
+            else:
+                for gap in range(last_bucket + 1, b):
+                    rows.append((key[0], gap, last_value, 1))
+                rows.append((key[0], b, v, 0))
+            last_bucket, last_value = b, v
+        return (last_bucket, last_value), _pd.DataFrame(
             rows, columns=["user_id", "bucket", "value", "is_gap"])
 
     return _apply_with_state(
-        events, "user_id", update,
+        events, "user_id", step,
         "user_id long, bucket long, value double, is_gap int",
-        "last_bucket long, last_value double", "append")
+        "last_bucket long, last_value double", "append",
+        init=(None, None), order=["ts", "event_id"])
 
 
 def streaming_transitions(events: DataFrame) -> DataFrame:
@@ -295,49 +334,40 @@ def streaming_transitions(events: DataFrame) -> DataFrame:
     state per key — only the (ts, event_id, type) of the LAST seen
     event survives between micro-batches, never a buffer of events.
 
-    Each micro-batch sorts its rows per user by (ts, event_id), chains
-    them onto the carried last event, and emits that batch's
+    Each micro-batch chains a user's rows in (ts, event_id) order onto
+    the carried last event and emits that batch's
     (user_id, from_type, to_type, n) increments in append mode.
     Summing the emitted increments over a drained stream equals the
     batch operator's per-user transition counts exactly (pinned in
-    tests/test_streaming.py). Caveat (same contract as
-    streaming_gapfill_locf): micro-batches must arrive in
-    non-decreasing event-time order per user — true for replay/tailing
-    sources; out-of-order arrival needs the watermarking twin.
+    tests/test_streaming.py).
     """
 
-    def update(key, pdfs, state):
+    def step(key, pdf, last):
         import pandas as _pd
 
-        frames = [p for p in pdfs if len(p)]
-        last = state.get if state.exists else None
-        if not frames:
-            if last is None:
-                return
-            state.update(last)
-            return
-        pdf = _pd.concat(frames).sort_values(["ts", "event_id"])
-        types = list(pdf["event_type"])
-        chain = ([last[2]] if last is not None else []) + types
+        chain = ([] if last[2] is None else [last[2]]) \
+            + list(pdf["event_type"])
         counts = {}
         for a, b in zip(chain, chain[1:]):
             counts[(a, b)] = counts.get((a, b), 0) + 1
         tail = pdf.iloc[-1]
-        state.update((int(tail["ts"].value), int(tail["event_id"]),
-                      str(tail["event_type"])))
-        if counts:
-            ks = sorted(counts)
-            yield _pd.DataFrame({
-                "user_id": [key[0]] * len(ks),
-                "from_type": [a for a, _ in ks],
-                "to_type": [b for _, b in ks],
-                "n": [counts[k] for k in ks],
-            })
+        st = (int(tail["ts"].value), int(tail["event_id"]),
+              str(tail["event_type"]))
+        if not counts:
+            return st, None
+        ks = sorted(counts)
+        return st, _pd.DataFrame({
+            "user_id": [key[0]] * len(ks),
+            "from_type": [a for a, _ in ks],
+            "to_type": [b for _, b in ks],
+            "n": [counts[k] for k in ks],
+        })
 
     return _apply_with_state(
-        events, "user_id", update,
+        events, "user_id", step,
         "user_id long, from_type string, to_type string, n long",
-        "ts long, event_id long, t string", "append")
+        "ts long, event_id long, t string", "append",
+        init=(None, None, None), order=["ts", "event_id"])
 
 
 def streaming_time_weighted(events: DataFrame) -> DataFrame:
@@ -360,52 +390,42 @@ def streaming_time_weighted(events: DataFrame) -> DataFrame:
 
     Emits the RUNNING (n_intervals, span_us, wsum_e6) per key per
     micro-batch in update mode; downstream keeps the latest per key.
-    Same ordering contract as the other stateful twins: micro-batches
-    arrive in non-decreasing event-time order per key.
     """
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import decimal as _dec
 
         import pandas as _pd
 
-        if state.exists:
-            last_ts, last_eid, last_v6, n, den, num_s = state.get
-            num = int(num_s)
-        else:
-            last_ts = last_eid = last_v6 = None
-            n = den = num = 0
-        frames = [p for p in pdfs if len(p)]
-        if frames:
-            pdf = _pd.concat(frames).sort_values(["ts", "event_id"])
-            for ts, eid, v in zip(pdf["ts"], pdf["event_id"], pdf["value"]):
-                us = int(_pd.Timestamp(ts).value // 1000)
-                if _pd.isna(v):
-                    v6 = None
-                else:
-                    # Spark Cast(double→decimal(18,6)): shortest repr,
-                    # then HALF_UP at scale 6
-                    v6 = int(_dec.Decimal(repr(float(v))).quantize(
-                        _dec.Decimal("1e-6"),
-                        rounding=_dec.ROUND_HALF_UP).scaleb(6))
-                if last_ts is not None:
-                    dt = us - last_ts
-                    n += 1
-                    den += dt
-                    if last_v6 is not None:
-                        num += last_v6 * dt
-                last_ts, last_eid, last_v6 = us, int(eid), v6
-        state.update((last_ts, last_eid, last_v6, n, den, str(num)))
-        yield _pd.DataFrame({
-            "key": [key[0]], "n_intervals": [n], "span_us": [den],
-            "wsum_e6": [str(num)],
-        })
+        last_ts, last_eid, last_v6, n, den, num = st
+        num = int(num)
+        for ts, eid, v in zip(pdf["ts"], pdf["event_id"], pdf["value"]):
+            us = int(_pd.Timestamp(ts).value // 1000)
+            if _pd.isna(v):
+                v6 = None
+            else:
+                # Spark Cast(double→decimal(18,6)): shortest repr,
+                # then HALF_UP at scale 6
+                v6 = int(_dec.Decimal(repr(float(v))).quantize(
+                    _dec.Decimal("1e-6"),
+                    rounding=_dec.ROUND_HALF_UP).scaleb(6))
+            if last_ts is not None:
+                dt = us - last_ts
+                n += 1
+                den += dt
+                if last_v6 is not None:
+                    num += last_v6 * dt
+            last_ts, last_eid, last_v6 = us, int(eid), v6
+        return (last_ts, last_eid, last_v6, n, den, str(num)), \
+            _pd.DataFrame({"key": [key[0]], "n_intervals": [n],
+                           "span_us": [den], "wsum_e6": [str(num)]})
 
     return _apply_with_state(
-        events, "user_id", update,
+        events, "user_id", step,
         "key long, n_intervals long, span_us long, wsum_e6 string",
         "last_ts long, last_eid long, last_v6 long, "
-        "n long, den long, num string", "update")
+        "n long, den long, num string", "update",
+        init=(None, None, None, 0, 0, "0"), order=["ts", "event_id"])
 
 
 def streaming_session_paths(
@@ -422,55 +442,43 @@ def streaming_session_paths(
     emitted; each user's still-open tail session stays in state. On a
     drained stream the summed increments equal the batch operator run
     over the input MINUS each user's final session (pinned in
-    tests/test_streaming.py). Same ordering contract as the other
-    stateful twins: micro-batches arrive in non-decreasing event-time
-    order per user.
+    tests/test_streaming.py).
     """
 
     timeout_us = int(timeout_s) * 1_000_000
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as _pd
 
-        if state.exists:
-            last_ts, d, path = state.get
-        else:
-            last_ts, d, path = None, 0, ""
+        last_ts, d, path = st
         counts = {}
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for ts, t in zip(pdf["ts"], pdf["event_type"]):
-                us = int(_pd.Timestamp(ts).value // 1000)
-                if last_ts is None:
-                    d, path = 1, ("" if t is None else str(t))
-                elif us - last_ts > timeout_us:
-                    k = (path, d)
-                    counts[k] = counts.get(k, 0) + 1
-                    d, path = 1, ("" if t is None else str(t))
-                elif d < depth:
-                    # array_join semantics: null types contribute no
-                    # segment (and no separator) in the batch operator
-                    if t is not None:
-                        path = f"{path}>{t}" if path else str(t)
-                    d += 1
-                else:
-                    pass  # session continues past the recorded prefix
-                last_ts = us
-        state.update((last_ts, d, path))
-        if counts:
-            ks = sorted(counts)
-            yield _pd.DataFrame({
-                "path": [p for p, _ in ks],
-                "depth": [dd for _, dd in ks],
-                "n_sessions": [counts[k] for k in ks],
-            })
+        for ts, t in zip(pdf["ts"], pdf["event_type"]):
+            us = int(_pd.Timestamp(ts).value // 1000)
+            if last_ts is None or us - last_ts > timeout_us:
+                if last_ts is not None:
+                    counts[(path, d)] = counts.get((path, d), 0) + 1
+                d, path = 1, ("" if t is None else str(t))
+            elif d < depth:
+                # array_join semantics: null types contribute no
+                # segment (and no separator) in the batch operator
+                if t is not None:
+                    path = f"{path}>{t}" if path else str(t)
+                d += 1
+            last_ts = us
+        if not counts:
+            return (last_ts, d, path), None
+        ks = sorted(counts)
+        return (last_ts, d, path), _pd.DataFrame({
+            "path": [p for p, _ in ks],
+            "depth": [dd for _, dd in ks],
+            "n_sessions": [counts[k] for k in ks],
+        })
 
     return _apply_with_state(
-        events, "user_id", update,
+        events, "user_id", step,
         "path string, depth int, n_sessions long",
-        "last_ts long, d int, path string", "append")
+        "last_ts long, d int, path string", "append",
+        init=(None, 0, ""), order=["ts", "event_id"])
 
 
 def streaming_expanding_zscore(events: DataFrame) -> DataFrame:
@@ -489,54 +497,45 @@ def streaming_expanding_zscore(events: DataFrame) -> DataFrame:
     HALF_EVEN while Spark's is HALF_UP).
     """
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import decimal as _dec
         import math as _math
 
         import pandas as _pd
 
-        if state.exists:
-            n, sx_s, sxx_s = state.get
-            sx_i, sxx_i = int(sx_s), int(sxx_s)
-        else:
-            n, sx_i, sxx_i = 0, 0, 0
+        n, sx_i, sxx_i = st[0], int(st[1]), int(st[2])
         out_eid, out_n, out_z = [], [], []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, v in zip(pdf["event_id"], pdf["value"]):
-                z = None
-                if not _pd.isna(v) and n >= 2:
-                    sx = float(_dec.Decimal(sx_i).scaleb(-6))
-                    sxx = float(_dec.Decimal(sxx_i).scaleb(-12))
-                    nd = float(n)
-                    var = (sxx - sx * sx / nd) / float(n - 1)
-                    if var > 0:
-                        z = (float(v) - sx / nd) / _math.sqrt(var)
-                out_eid.append(int(eid))
-                out_n.append(n)
-                out_z.append(z)
-                if not _pd.isna(v):
-                    v6 = int(_dec.Decimal(repr(float(v))).quantize(
-                        _dec.Decimal("1e-6"),
-                        rounding=_dec.ROUND_HALF_UP).scaleb(6))
-                    n += 1
-                    sx_i += v6
-                    sxx_i += v6 * v6
-        state.update((n, str(sx_i), str(sxx_i)))
-        if out_eid:
-            yield _pd.DataFrame({
-                "event_id": out_eid,
-                "key": [key[0]] * len(out_eid),
-                "n_prev": out_n,
-                "zraw": _pd.array(out_z, dtype="float64"),
-            })
+        for eid, v in zip(pdf["event_id"], pdf["value"]):
+            z = None
+            if not _pd.isna(v) and n >= 2:
+                sx = float(_dec.Decimal(sx_i).scaleb(-6))
+                sxx = float(_dec.Decimal(sxx_i).scaleb(-12))
+                nd = float(n)
+                var = (sxx - sx * sx / nd) / float(n - 1)
+                if var > 0:
+                    z = (float(v) - sx / nd) / _math.sqrt(var)
+            out_eid.append(int(eid))
+            out_n.append(n)
+            out_z.append(z)
+            if not _pd.isna(v):
+                v6 = int(_dec.Decimal(repr(float(v))).quantize(
+                    _dec.Decimal("1e-6"),
+                    rounding=_dec.ROUND_HALF_UP).scaleb(6))
+                n += 1
+                sx_i += v6
+                sxx_i += v6 * v6
+        return (n, str(sx_i), str(sxx_i)), _pd.DataFrame({
+            "event_id": out_eid,
+            "key": [key[0]] * len(out_eid),
+            "n_prev": out_n,
+            "zraw": _pd.array(out_z, dtype="float64"),
+        })
 
     return _apply_with_state(
-        events, "user_id", update,
+        events, "user_id", step,
         "event_id long, key long, n_prev long, zraw double",
-        "n long, sx string, sxx string", "append")
+        "n long, sx string, sxx string", "append",
+        init=(0, "0", "0"), order=["ts", "event_id"])
 
 
 def streaming_conversion_lag(
@@ -554,43 +553,39 @@ def streaming_conversion_lag(
     `conversion_lag_rollup` — on a drained stream that equals the batch
     operator bit-for-bit (pinned in tests/test_streaming.py; lag stays
     an INTEGER micros difference end-to-end — the rollup owns all
-    floating-point). Same ordering contract as the other stateful twins:
-    micro-batches arrive in non-decreasing event-time order per user (a
-    `to_type` event never precedes the `from_type` that converts it
-    across batch boundaries; within a batch order is irrelevant).
+    floating-point). Row order within a micro-batch is irrelevant (the
+    step takes minima over the whole frame); across micro-batches a
+    `to_type` event never precedes the `from_type` that converts it.
     """
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as _pd
 
-        f_us, conv_us = state.get if state.exists else (-1, -1)
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.dropna(subset=["ts"])
-            us = (_pd.to_datetime(pdf["ts"]).astype("datetime64[ns]")
-                  .astype("int64") // 1000)
-            types = pdf["event_type"]
-            vmask = types == from_type
-            if vmask.any():
-                mv = int(us[vmask].min())
-                f_us = mv if f_us < 0 else min(f_us, mv)
-            if f_us >= 0:
-                pmask = (types == to_type) & (us > f_us)
-                if pmask.any():
-                    mp = int(us[pmask].min())
-                    conv_us = mp if conv_us < 0 else min(conv_us, mp)
-        state.update((f_us, conv_us))
+        f_us, conv_us = st
+        pdf = pdf.dropna(subset=["ts"])
+        us = (_pd.to_datetime(pdf["ts"]).astype("datetime64[ns]")
+              .astype("int64") // 1000)
+        types = pdf["event_type"]
+        vmask = types == from_type
+        if vmask.any():
+            mv = int(us[vmask].min())
+            f_us = mv if f_us < 0 else min(f_us, mv)
         if f_us >= 0:
-            lag = (conv_us - f_us) if conv_us >= 0 else None
-            yield _pd.DataFrame(
-                {"u": [key[0]], "f_us": [f_us],
-                 "lag_us": _pd.array([lag], dtype="Int64")})
+            pmask = (types == to_type) & (us > f_us)
+            if pmask.any():
+                mp = int(us[pmask].min())
+                conv_us = mp if conv_us < 0 else min(conv_us, mp)
+        if f_us < 0:
+            return (f_us, conv_us), None
+        lag = (conv_us - f_us) if conv_us >= 0 else None
+        return (f_us, conv_us), _pd.DataFrame(
+            {"u": [key[0]], "f_us": [f_us],
+             "lag_us": _pd.array([lag], dtype="Int64")})
 
     return _apply_with_state(
-        events, "user_id", update,
+        events, "user_id", step,
         "u long, f_us long, lag_us long",
-        "f_us long, conv long", "update")
+        "f_us long, conv long", "update", init=(-1, -1), order=None)
 
 
 def streaming_new_vs_returning(
@@ -601,47 +596,36 @@ def streaming_new_vs_returning(
     stage: per user, emit each active period EXACTLY ONCE with its
     new/returning flag. State is two longs per user (first and last
     emitted period); a period is emitted iff greater than the last —
-    exactly-once increments under the non-decreasing event-time
-    contract, so APPEND mode composes (nothing is ever retracted).
+    exactly-once increments under the module's ordering contract, so
+    APPEND mode composes (nothing is ever retracted).
 
     Drained increments → `new_vs_returning_rollup` equals the batch
     operator bit-for-bit (pinned in tests/test_streaming.py).
     """
-    step = int(period_us)
+    period = int(period_us)
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as _pd
 
-        first_p, last_p = state.get if state.exists else (-1, -1)
-        fresh = set()
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.dropna(subset=["ts"])
-            us = (_pd.to_datetime(pdf["ts"]).astype("datetime64[ns]")
-                  .astype("int64") // 1000)
-            for p in (us // step).unique():
-                p = int(p)
-                if last_p < 0 or p > last_p:
-                    fresh.add(p)
-        if fresh:
-            ps = sorted(fresh)
-            if first_p < 0:
-                first_p = ps[0]
-            last_p = max(last_p, ps[-1])
-            state.update((first_p, last_p))
-            yield _pd.DataFrame({
-                "user_id": [key[0]] * len(ps),
-                "period": ps,
-                "is_new": [p == first_p for p in ps],
-            })
-        else:
-            state.update((first_p, last_p))
+        first_p, last_p = st
+        us = (_pd.to_datetime(pdf["ts"].dropna()).astype("datetime64[ns]")
+              .astype("int64") // 1000)
+        ps = sorted(p for p in map(int, (us // period).unique())
+                    if last_p < 0 or p > last_p)
+        if not ps:
+            return st, None
+        if first_p < 0:
+            first_p = ps[0]
+        return (first_p, max(last_p, ps[-1])), _pd.DataFrame({
+            "user_id": [key[0]] * len(ps),
+            "period": ps,
+            "is_new": [p == first_p for p in ps],
+        })
 
     return _apply_with_state(
-        events, "user_id", update,
+        events, "user_id", step,
         "user_id long, period long, is_new boolean",
-        "first_p long, last_p long", "append")
+        "first_p long, last_p long", "append", init=(-1, -1), order=None)
 
 
 def streaming_rfm_state(orders: DataFrame) -> DataFrame:
@@ -662,39 +646,34 @@ def streaming_rfm_state(orders: DataFrame) -> DataFrame:
     (pinned in tests/test_streaming.py).
     """
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import decimal as _dec
 
         import pandas as _pd
 
-        last_us, freq, mon = (state.get if state.exists
-                              else (-1, 0, "0.0000"))
+        last_us, freq, mon = st
         total = _dec.Decimal(mon)
         q4 = _dec.Decimal("1e-4")
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            for d, v in zip(pdf["o_orderdate"], pdf["o_totalprice"]):
-                # DATE arrives as date or Timestamp depending on the
-                # Arrow conversion; Timestamp() normalizes both to
-                # midnight (the forced-UTC batch cast semantics)
-                us = int(_pd.Timestamp(d).value // 1000)
-                last_us = max(last_us, us)
-                freq += 1
-                # Spark Cast(double→decimal(12,4)): shortest repr,
-                # then HALF_UP at scale 4 (functions.dec)
-                total += _dec.Decimal(repr(float(v))).quantize(
-                    q4, rounding=_dec.ROUND_HALF_UP)
-        state.update((last_us, freq, str(total)))
-        yield _pd.DataFrame({
+        for d, v in zip(pdf["o_orderdate"], pdf["o_totalprice"]):
+            # DATE arrives as date or Timestamp depending on the
+            # Arrow conversion; Timestamp() normalizes both to
+            # midnight (the forced-UTC batch cast semantics)
+            last_us = max(last_us, int(_pd.Timestamp(d).value // 1000))
+            freq += 1
+            # Spark Cast(double→decimal(12,4)): shortest repr,
+            # then HALF_UP at scale 4 (functions.dec)
+            total += _dec.Decimal(repr(float(v))).quantize(
+                q4, rounding=_dec.ROUND_HALF_UP)
+        return (last_us, freq, str(total)), _pd.DataFrame({
             "cust": [key[0]], "last_order_us": [last_us],
             "frequency": [freq], "mon": [str(total)],
         })
 
     return _apply_with_state(
-        orders, "o_custkey", update,
+        orders, "o_custkey", step,
         "cust long, last_order_us long, frequency long, mon string",
-        "last_us long, freq long, mon string", "update")
+        "last_us long, freq long, mon string", "update",
+        init=(-1, 0, "0.0000"), order=None)
 
 
 def streaming_m4(events: DataFrame, bucket_us: int = 3_600_000_000
@@ -713,37 +692,31 @@ def streaming_m4(events: DataFrame, bucket_us: int = 3_600_000_000
     (values are picked, never computed, so equality is structural).
     """
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import pandas as _pd
 
-        st = state.get if state.exists else (0, None, None, "", "",
-                                             None, None)
         n, v_first, v_last, k_first, k_last, v_min, v_max = st
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.dropna(subset=["ts", "value"])
-            if not len(pdf):
-                continue
-            us = (_pd.to_datetime(pdf["ts"]).astype("datetime64[ns]")
-                  .astype("int64") // 1000)
-            for u, eid, v in zip(us, pdf["event_id"], pdf["value"]):
-                ordk = f"{u:020d}:{int(eid):012d}"
-                v = float(v)
-                n += 1
-                if not k_first or ordk < k_first:
-                    k_first, v_first = ordk, v
-                if not k_last or ordk > k_last:
-                    k_last, v_last = ordk, v
-                v_min = v if v_min is None else min(v_min, v)
-                v_max = v if v_max is None else max(v_max, v)
-        state.update((n, v_first, v_last, k_first, k_last, v_min, v_max))
-        if n:
-            yield _pd.DataFrame({
-                "user_id": [key[0]], "bucket": [key[1]], "n": [n],
-                "v_first": [v_first], "v_last": [v_last],
-                "v_min": [v_min], "v_max": [v_max],
-            })
+        pdf = pdf.dropna(subset=["ts", "value"])
+        us = (_pd.to_datetime(pdf["ts"]).astype("datetime64[ns]")
+              .astype("int64") // 1000)
+        for u, eid, v in zip(us, pdf["event_id"], pdf["value"]):
+            ordk = f"{u:020d}:{int(eid):012d}"
+            v = float(v)
+            n += 1
+            if not k_first or ordk < k_first:
+                k_first, v_first = ordk, v
+            if not k_last or ordk > k_last:
+                k_last, v_last = ordk, v
+            v_min = v if v_min is None else min(v_min, v)
+            v_max = v if v_max is None else max(v_max, v)
+        st = (n, v_first, v_last, k_first, k_last, v_min, v_max)
+        if not n:
+            return st, None
+        return st, _pd.DataFrame({
+            "user_id": [key[0]], "bucket": [key[1]], "n": [n],
+            "v_first": [v_first], "v_last": [v_last],
+            "v_min": [v_min], "v_max": [v_max],
+        })
 
     from pyspark.sql import functions as F
 
@@ -752,11 +725,12 @@ def streaming_m4(events: DataFrame, bucket_us: int = 3_600_000_000
         F.floor(F.unix_micros(F.col("ts").cast("timestamp"))
                 / F.lit(int(bucket_us))).cast("long"))
     return _apply_with_state(
-        keyed, ("user_id", "bucket"), update,
+        keyed, ("user_id", "bucket"), step,
         "user_id long, bucket long, n long, v_first double, v_last double, "
         "v_min double, v_max double",
         "n long, v_first double, v_last double, "
-        "k_first string, k_last string, v_min double, v_max double", "update")
+        "k_first string, k_last string, v_min double, v_max double", "update",
+        init=(0, None, None, "", "", None, None), order=None)
 
 
 def streaming_ewma(
@@ -770,13 +744,12 @@ def streaming_ewma(
     chain per key with the running value carried as an EXACT DECIMAL
     STRING in state (the streaming_time_weighted discipline — no float
     ever enters the recursion, so drained ≡ batch bit-for-bit). State
-    per key is (last_seq, e); within a micro-batch rows process in
-    seq order; the usual non-decreasing cross-batch contract applies.
-    Emits every (key, seq, val, ewma) row in append mode."""
+    per key is (last_seq, e); rows fold in seq order. Emits every
+    (key, seq, val, ewma) row in append mode."""
 
     a_str = alpha
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import decimal as _dec
 
         import pandas as _pd
@@ -786,32 +759,27 @@ def streaming_ewma(
         q6 = _dec.Decimal("1e-6")  # output scale; chain carries 9
         a = _dec.Decimal(a_str)
         b = _dec.Decimal(1) - a
-        last_seq, e_s = state.get if state.exists else (-1 << 62, "")
+        last_seq, e_s = st
         e = _dec.Decimal(e_s) if e_s else None
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(seq_col)
-            out_seq, out_val, out_e = [], [], []
-            for s_, v in zip(pdf[seq_col], pdf[val_col]):
-                x = _dec.Decimal(v)
-                e = x if e is None else (a * x + b * e).quantize(
-                    q9, rounding=_dec.ROUND_HALF_UP)
-                last_seq = int(s_)
-                out_seq.append(int(s_))
-                out_val.append(float(x))
-                out_e.append(float(e.quantize(
-                    q6, rounding=_dec.ROUND_HALF_UP)))
-            yield _pd.DataFrame({
-                "y": [key[0]] * len(out_seq), "day": out_seq,
-                "rev": out_val, "ewma": out_e,
-            })
-        state.update((last_seq, str(e) if e is not None else ""))
+        out_seq, out_val, out_e = [], [], []
+        for s_, v in zip(pdf[seq_col], pdf[val_col]):
+            x = _dec.Decimal(v)
+            e = x if e is None else (a * x + b * e).quantize(
+                q9, rounding=_dec.ROUND_HALF_UP)
+            last_seq = int(s_)
+            out_seq.append(int(s_))
+            out_val.append(float(x))
+            out_e.append(float(e.quantize(q6, rounding=_dec.ROUND_HALF_UP)))
+        return (last_seq, str(e) if e is not None else ""), _pd.DataFrame({
+            "y": [key[0]] * len(out_seq), "day": out_seq,
+            "rev": out_val, "ewma": out_e,
+        })
 
     return _apply_with_state(
-        rows, key_col, update,
+        rows, key_col, step,
         "y long, day long, rev double, ewma double",
-        "last_seq long, e string", "append")
+        "last_seq long, e string", "append",
+        init=(-1 << 62, ""), order=seq_col)
 
 
 def streaming_cusum(
@@ -834,16 +802,15 @@ def streaming_cusum(
     discipline. Each step is the IDENTICAL fixed-order float expression
     as the batch chain (same r2 = shortest-repr decimal HALF_UP), so no
     quantization drift can accumulate across micro-batches. O(1) state;
-    rows within a micro-batch process in seq order; the usual
-    non-decreasing cross-batch contract applies. Append mode, one
-    output row per input day: (day, rev, cusum, flag)."""
+    rows fold in seq order. Append mode, one output row per input day:
+    (day, rev, cusum, flag)."""
     from pyspark.sql import functions as F
 
     mu_f = float(mu)
     k_f = float(k_frac)
     h_f = float(h_mult)
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import decimal as _dec
 
         import pandas as _pd
@@ -854,29 +821,25 @@ def streaming_cusum(
             return float(_dec.Decimal(repr(float(x))).quantize(
                 q2, rounding=_dec.ROUND_HALF_UP))
 
-        last_seq, s_str = state.get if state.exists else (-1 << 62, "")
+        last_seq, s_str = st
         s = float(s_str) if s_str else 0.0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(seq_col)
-            days, revs, sums, flags = [], [], [], []
-            for d_, v in zip(pdf[seq_col], pdf[val_col]):
-                s = max(0.0, r2(s + float(v) - mu_f - k_f * mu_f))
-                last_seq = int(d_)
-                days.append(int(d_))
-                revs.append(r2(v))
-                sums.append(s)
-                flags.append(int(s > h_f * mu_f))
-            yield _pd.DataFrame({
-                "day": days, "rev": revs, "cusum": sums, "flag": flags,
-            })
-        state.update((last_seq, repr(s)))
+        days, revs, sums, flags = [], [], [], []
+        for d_, v in zip(pdf[seq_col], pdf[val_col]):
+            s = max(0.0, r2(s + float(v) - mu_f - k_f * mu_f))
+            last_seq = int(d_)
+            days.append(int(d_))
+            revs.append(r2(v))
+            sums.append(s)
+            flags.append(int(s > h_f * mu_f))
+        return (last_seq, repr(s)), _pd.DataFrame({
+            "day": days, "rev": revs, "cusum": sums, "flag": flags,
+        })
 
     return _apply_with_state(
-        rows.withColumn("_k", F.lit(0)), "_k", update,
+        rows.withColumn("_k", F.lit(0)), "_k", step,
         "day long, rev double, cusum double, flag int",
-        "last_seq long, s string", "append")
+        "last_seq long, s string", "append",
+        init=(-1 << 62, ""), order=seq_col)
 
 
 def streaming_holt(
@@ -893,12 +856,11 @@ def streaming_holt(
     to a two-variable recursion). Each step quantizes level and trend
     round-9 HALF_UP with the QUANTIZED level feeding the trend update —
     identical order to the batch chain, so drained ≡ batch bit-for-bit.
-    State per key is (last_seq, l, b); rows within a micro-batch
-    process in seq order; non-decreasing cross-batch contract. Emits
+    State per key is (last_seq, l, b); rows fold in seq order. Emits
     (key, seq, val, level, trend, forecast) in append mode."""
     a_str, b_str = alpha, beta
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import decimal as _dec
 
         import pandas as _pd
@@ -910,49 +872,44 @@ def streaming_holt(
         ac = _dec.Decimal(1) - a
         bt = _dec.Decimal(b_str)
         bc = _dec.Decimal(1) - bt
-        last_seq, l_s, b_s = state.get if state.exists else (-1 << 62, "", "")
+        last_seq, l_s, b_s = st
         lv = _dec.Decimal(l_s) if l_s else None
         tr = _dec.Decimal(b_s) if b_s else None
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(seq_col)
-            out = {k: [] for k in
-                   ("seq", "val", "level", "trend", "forecast")}
-            for s_, v in zip(pdf[seq_col], pdf[val_col]):
-                x = _dec.Decimal(v)
-                if lv is None:
-                    lv = x.quantize(q9)
-                    tr = _dec.Decimal(0).quantize(q9)
-                else:
-                    prev = lv
-                    lv = (a * x + ac * (prev + tr)).quantize(
-                        q9, rounding=_dec.ROUND_HALF_UP)
-                    tr = (bt * (lv - prev) + bc * tr).quantize(
-                        q9, rounding=_dec.ROUND_HALF_UP)
-                last_seq = int(s_)
-                out["seq"].append(int(s_))
-                out["val"].append(float(x))
-                out["level"].append(float(lv.quantize(
-                    q6, rounding=_dec.ROUND_HALF_UP)))
-                out["trend"].append(float(tr.quantize(
-                    q6, rounding=_dec.ROUND_HALF_UP)))
-                out["forecast"].append(float((lv + tr).quantize(
-                    q6, rounding=_dec.ROUND_HALF_UP)))
-            yield _pd.DataFrame({
-                "y": [key[0]] * len(out["seq"]), "day": out["seq"],
-                "rev": out["val"], "level": out["level"],
-                "trend": out["trend"], "forecast": out["forecast"],
-            })
-        state.update((last_seq,
-                      str(lv) if lv is not None else "",
-                      str(tr) if tr is not None else ""))
+        out = {k: [] for k in ("seq", "val", "level", "trend", "forecast")}
+        for s_, v in zip(pdf[seq_col], pdf[val_col]):
+            x = _dec.Decimal(v)
+            if lv is None:
+                lv = x.quantize(q9)
+                tr = _dec.Decimal(0).quantize(q9)
+            else:
+                prev = lv
+                lv = (a * x + ac * (prev + tr)).quantize(
+                    q9, rounding=_dec.ROUND_HALF_UP)
+                tr = (bt * (lv - prev) + bc * tr).quantize(
+                    q9, rounding=_dec.ROUND_HALF_UP)
+            last_seq = int(s_)
+            out["seq"].append(int(s_))
+            out["val"].append(float(x))
+            out["level"].append(float(lv.quantize(
+                q6, rounding=_dec.ROUND_HALF_UP)))
+            out["trend"].append(float(tr.quantize(
+                q6, rounding=_dec.ROUND_HALF_UP)))
+            out["forecast"].append(float((lv + tr).quantize(
+                q6, rounding=_dec.ROUND_HALF_UP)))
+        st = (last_seq, str(lv) if lv is not None else "",
+              str(tr) if tr is not None else "")
+        return st, _pd.DataFrame({
+            "y": [key[0]] * len(out["seq"]), "day": out["seq"],
+            "rev": out["val"], "level": out["level"],
+            "trend": out["trend"], "forecast": out["forecast"],
+        })
 
     return _apply_with_state(
-        rows, key_col, update,
+        rows, key_col, step,
         "y long, day long, rev double, level double,"
         " trend double, forecast double",
-        "last_seq long, l string, b string", "append")
+        "last_seq long, l string, b string", "append",
+        init=(-1 << 62, "", ""), order=seq_col)
 
 
 def streaming_sprt(
@@ -971,14 +928,13 @@ def streaming_sprt(
     batch entry and its oracle share — no libm anywhere), the running
     LLR is carried as an exact decimal string in state, and the
     boundary compares are decimal-vs-decimal — drained ≡ batch is
-    bit-for-bit by construction. O(1) state; non-decreasing cross-batch
-    seq contract. Emits (day, n_users, n_converted, llr, decision) in
-    append mode."""
+    bit-for-bit by construction. O(1) state; rows fold in seq order.
+    Emits (day, n_users, n_converted, llr, decision) in append mode."""
     from pyspark.sql import functions as F
 
     c1_s, c0_s, a_s, b_s = c1, c0, a, b
 
-    def update(key, pdfs, state):
+    def step(key, pdf, st):
         import decimal as _dec
 
         import pandas as _pd
@@ -986,30 +942,26 @@ def streaming_sprt(
         _dec.getcontext().prec = 50
         c1d, c0d = _dec.Decimal(c1_s), _dec.Decimal(c0_s)
         ad, bd = _dec.Decimal(a_s), _dec.Decimal(b_s)
-        last_seq, llr_s = state.get if state.exists else (-1 << 62, "0")
+        last_seq, llr_s = st
         llr = _dec.Decimal(llr_s)
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(seq_col)
-            out = {k: [] for k in
-                   ("day", "n_users", "n_converted", "llr", "decision")}
-            for d_, n, k_ in zip(pdf[seq_col], pdf["n_users"],
-                                 pdf["n_converted"]):
-                llr += int(k_) * c1d + (int(n) - int(k_)) * c0d
-                last_seq = int(d_)
-                out["day"].append(int(d_))
-                out["n_users"].append(int(n))
-                out["n_converted"].append(int(k_))
-                out["llr"].append(float(llr))
-                out["decision"].append(
-                    "accept_h1" if llr >= ad
-                    else ("accept_h0" if llr <= bd else "continue"))
-            yield _pd.DataFrame(out)
-        state.update((last_seq, str(llr)))
+        out = {k: [] for k in
+               ("day", "n_users", "n_converted", "llr", "decision")}
+        for d_, n, k_ in zip(pdf[seq_col], pdf["n_users"],
+                             pdf["n_converted"]):
+            llr += int(k_) * c1d + (int(n) - int(k_)) * c0d
+            last_seq = int(d_)
+            out["day"].append(int(d_))
+            out["n_users"].append(int(n))
+            out["n_converted"].append(int(k_))
+            out["llr"].append(float(llr))
+            out["decision"].append(
+                "accept_h1" if llr >= ad
+                else ("accept_h0" if llr <= bd else "continue"))
+        return (last_seq, str(llr)), _pd.DataFrame(out)
 
     return _apply_with_state(
-        rows.withColumn("_k", F.lit(0)), "_k", update,
+        rows.withColumn("_k", F.lit(0)), "_k", step,
         "day long, n_users long, n_converted long, "
         "llr double, decision string",
-        "last_seq long, llr string", "append")
+        "last_seq long, llr string", "append",
+        init=(-1 << 62, "0"), order=seq_col)

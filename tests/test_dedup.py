@@ -63,6 +63,38 @@ def test_lsh_verified_portable_matches_exact_jaccard(spark, sf_dir):
         assert recall >= 0.9, f"recall {recall:.3f} < 0.9"
 
 
+def test_lsh_entries_and_oracles_share_min_band_matches(spark, sf_dir,
+                                                        monkeypatch):
+    """Both LSH entries hand the operator the band-collision prefilter
+    that their oracles replay, and the oracle's CTE chain has no default
+    of its own that could drift from the operator's."""
+    import inspect
+
+    import pytest
+
+    from gpu_bdb_spark.operators import dedup
+    from gpu_bdb_spark.queries import dedup_ops
+    from gpu_bdb_spark.queries.registry import all_specs
+
+    class Built(Exception):
+        pass
+
+    def capture(*args, **kwargs):
+        raise Built(kwargs)
+
+    param = inspect.signature(
+        dedup_ops._lsh_verified_ctes).parameters["min_band_matches"]
+    assert param.default is param.empty
+    monkeypatch.setattr(dedup, "minhash_lsh_verified_portable", capture)
+    want = dedup_ops.LSH_MIN_BAND_MATCHES
+    for name in ("dedup_lsh_verified", "dedup_clusters_lsh"):
+        spec = all_specs()[name]
+        assert f"HAVING COUNT(*) >= {want}\n" in spec.oracle, name
+        with pytest.raises(Built) as built:
+            spec.fn(spark, sf_dir)
+        assert built.value.args[0]["min_band_matches"] == want, name
+
+
 def test_simhash_deterministic_and_discriminative(spark, sf_dir):
     d = read_table(spark, sf_dir, "documents", ["doc_id", "text"],
                    hint_broadcast=False)

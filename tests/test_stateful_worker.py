@@ -114,17 +114,19 @@ class State:
     get = None
 
     def update(self, value):
-        self.value = value
+        self.exists, self.get = True, tuple(value)
 
 
-with open(sys.argv[1], "rb") as f:
-    fn = pickle.load(f)
-state = State()
-frame = pd.DataFrame({"user_id": [7, 7], "value": [1.5, None]})
-out = pd.concat(list(fn((7,), iter([frame]), state)))
+calls = []
+for path, key, chunks in json.loads(sys.argv[1]):
+    with open(path, "rb") as f:
+        fn = pickle.load(f)
+    state = State()
+    out = pd.concat(list(fn(tuple(key), iter(map(pd.DataFrame, chunks)),
+                            state)))
+    calls.append({"rows": out.to_dict("records"), "state": list(state.get)})
 print(json.dumps({
-    "rows": out.to_dict("records"),
-    "state": list(state.value),
+    "calls": calls,
     "leaked": sorted(m for m in sys.modules
                      if m.split(".")[0] == "gpu_bdb_spark"),
     "stat_checked": getattr(zipimport.zipimporter.invalidate_caches,
@@ -137,32 +139,48 @@ def test_apply_with_state_udf_ships_by_value(spark, monkeypatch, tmp_path):
     """The function `_apply_with_state` hands to applyInPandasWithState
     unpickles and runs in an isolated interpreter that cannot import
     this package, and leaves no `gpu_bdb_spark` module behind: executors
-    don't need the package on their PYTHONPATH."""
+    don't need the package on their PYTHONPATH. It folds a key's chunks
+    as one frame in the op's order: an EWMA chain fed two out-of-order
+    chunks equals the chain fed the same rows ascending."""
     from pyspark import cloudpickle
     from pyspark.sql.group import GroupedData
 
-    from gpu_bdb_spark.streaming.stateful import running_user_stats
+    from gpu_bdb_spark.streaming.stateful import (running_user_stats,
+                                                  streaming_ewma)
 
-    captured = {}
+    captured = []
 
     def capture(self, func, **kwargs):
-        captured["func"] = func
-        return None
+        path = tmp_path / f"udf{len(captured)}.pkl"
+        path.write_bytes(cloudpickle.dumps(func))
+        captured.append(str(path))
 
     monkeypatch.setattr(GroupedData, "applyInPandasWithState", capture)
     running_user_stats(
         spark.createDataFrame([(7, 1.5)], "user_id long, value double"))
-    payload = tmp_path / "udf.pkl"
-    payload.write_bytes(cloudpickle.dumps(captured["func"]))
+    streaming_ewma(
+        spark.createDataFrame([(1, 1, 50.0)], "y long, day long, rev double"))
+    stats, ewma = captured
+    calls = [
+        (stats, [7], [{"user_id": [7, 7], "value": [1.5, None]}]),
+        (ewma, [1], [{"y": [1, 1], "day": [3, 2], "rev": [70.0, 60.0]},
+                     {"y": [1], "day": [1], "rev": [50.0]}]),
+        (ewma, [1], [{"y": [1, 1, 1], "day": [1, 2, 3],
+                      "rev": [50.0, 60.0, 70.0]}]),
+    ]
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
-        [sys.executable, "-I", "-c", _LOAD_SCRIPT, str(payload)],
+        [sys.executable, "-I", "-c", _LOAD_SCRIPT, json.dumps(calls)],
         capture_output=True, text=True, timeout=120, cwd=str(tmp_path),
         env=env)
     assert out.returncode == 0, out.stderr
     res = json.loads(out.stdout.strip().splitlines()[-1])
-    assert res["rows"] == [
+    (stats_call, shuffled, ascending) = res["calls"]
+    assert stats_call["rows"] == [
         {"user_id": 7, "n_events": 2, "total_value": 1.5}], res
-    assert res["state"] == [2, 1.5], res
+    assert stats_call["state"] == [2, 1.5], res
+    assert shuffled == ascending, res
+    assert [r["ewma"] for r in ascending["rows"]] == [50.0, 52.0, 55.6], res
+    assert ascending["state"] == [3, "55.600000000"], res
     assert res["leaked"] == [], res
     assert res["stat_checked"] is (sys.version_info < (3, 12)), res

@@ -1375,6 +1375,126 @@ def test_streaming_sprt_equals_batch(spark, sf_dir, tmp_path_factory):
     assert got["n_users"].equals(expect["n_users"])
     assert got["n_converted"].equals(expect["n_converted"])
 
+
+def _event_rows(spark, sf_dir):
+    from gpu_bdb_spark.io import read_table
+
+    return (read_table(spark, sf_dir, "events")
+            .filter(F.col("user_id").isNotNull())
+            .select("user_id", "ts", "event_id", "event_type", "value"))
+
+
+def _daily_revenue(spark, sf_dir):
+    from gpu_bdb_spark.io import read_table
+
+    o = read_table(spark, sf_dir, "orders", ["o_orderdate", "o_totalprice"])
+    return o.groupBy(
+        F.year("o_orderdate").cast("long").alias("y"),
+        F.floor(F.unix_micros(F.col("o_orderdate").cast("timestamp"))
+                / F.lit(86_400_000_000)).cast("long").alias("day"),
+    ).agg(F.sum(F.col("o_totalprice").cast("decimal(12,4)")).alias("rev"))
+
+
+def _daily_conversions(spark, sf_dir):
+    from gpu_bdb_spark.queries.behavior_ops import DAY_US
+
+    per_user = _event_rows(spark, sf_dir).groupBy(
+        F.floor(F.unix_micros(F.col("ts").cast("timestamp"))
+                / F.lit(DAY_US)).cast("long").alias("day"),
+        "user_id",
+    ).agg(F.max((F.col("event_type") == "purchase").cast("int"))
+          .alias("conv"))
+    return per_user.groupBy("day").agg(
+        F.count(F.lit(1)).cast("long").alias("n_users"),
+        F.sum("conv").cast("long").alias("n_converted"))
+
+
+def _sprt_on(op, stream):
+    from gpu_bdb_spark.queries.behavior_ops import _SPRT
+
+    return op(stream, *(str(_SPRT[k]) for k in ("c1", "c0", "a", "b")))
+
+
+_EVENT_ORDER = ("user_id", "ts", "event_id")
+
+#: The twins whose result a per-chunk fold changes: op name -> (input rows,
+#: the key and order columns the input file is sorted by, the op call,
+#: the memory-sink runner for the op's output mode).
+_ORDER_PINS = {
+    "streaming_gapfill_locf": (
+        _event_rows, _EVENT_ORDER,
+        lambda op, s: op(s.select("user_id", "ts", "event_id", "value")),
+        _run_to_memory_append),
+    # most gaps between a user's events exceed an hour, so sessions close
+    "streaming_session_paths": (
+        _event_rows, _EVENT_ORDER,
+        lambda op, s: op(s.select("user_id", "ts", "event_id", "event_type"),
+                         timeout_s=3600, depth=3),
+        _run_to_memory_append),
+    "streaming_expanding_zscore": (
+        _event_rows, _EVENT_ORDER,
+        lambda op, s: op(s.select("user_id", "ts", "event_id", "value")),
+        _run_to_memory_append),
+    # order-free within a micro-batch only when the minima are taken
+    # over the key's whole batch, not chunk by chunk
+    "streaming_conversion_lag": (
+        _event_rows, _EVENT_ORDER,
+        lambda op, s: op(s.select("user_id", "ts", "event_type")),
+        _run_to_memory_update),
+    "streaming_ewma": (
+        _daily_revenue, ("y", "day"),
+        lambda op, s: op(s, "y", "day", "rev"), _run_to_memory_append),
+    "streaming_holt": (
+        _daily_revenue, ("y", "day"),
+        lambda op, s: op(s, "y", "day", "rev"), _run_to_memory_append),
+    "streaming_cusum": (
+        _daily_revenue, ("day",),
+        lambda op, s: op(
+            s.select("day", F.col("rev").cast("double").alias("rev")),
+            150000.0),
+        _run_to_memory_append),
+    "streaming_sprt": (
+        _daily_conversions, ("day",), _sprt_on, _run_to_memory_append),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ORDER_PINS))
+def test_stateful_fold_order_spans_arrow_chunks(spark, sf_dir, tmp_path,
+                                                name):
+    """Spark hands a key's rows to the fold in Arrow chunks of
+    `spark.sql.execution.arrow.maxRecordsPerBatch` rows. An
+    order-dependent twin must order the key's whole micro-batch, not
+    each chunk: one descending input file drained in 2-row chunks emits
+    exactly what the ascending file emits at default chunking."""
+    from gpu_bdb_spark.streaming import stateful
+
+    rows, order, build, runner = _ORDER_PINS[name]
+    df = rows(spark, sf_dir)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    got = {}
+    for direction in ("asc", "desc"):
+        path = str(tmp_path / direction)
+        df.coalesce(1).sortWithinPartitions(
+            *(getattr(F.col(c), direction)() for c in order)
+        ).write.parquet(path)
+        stream = spark.readStream.schema(
+            spark.read.parquet(path).schema).parquet(path)
+        try:
+            if direction == "desc":
+                spark.conf.set(conf, "2")
+            got[direction] = runner(
+                spark, build(getattr(stateful, name), stream),
+                f"order_{name}_{direction}")
+        finally:
+            spark.conf.set(conf, saved)
+    cols = list(got["asc"].columns)
+    asc, desc = (got[d].sort_values(cols, ignore_index=True)
+                 for d in ("asc", "desc"))
+    assert len(asc) > 0
+    assert desc.equals(asc), (desc.head(), asc.head())
+
+
 def test_pointer_commit_marker_never_empty(spark, tmp_path):
     """ADVICE r04: pointer-mode commit links the marker into place with
     its content already durable (os.link of a fsync'd tmp file), so a
@@ -1541,3 +1661,80 @@ _STATEFUL_BUILDS = {
         _alias(s, day="event_id", n_users="user_id",
                n_converted="event_id"), "0.1", "-0.1", "2", "-2"),
 }
+
+
+#: (stateStructType, outputStructType, outputMode) of every
+#: applyInPandasWithState twin. A checkpoint written by one version of
+#: an op resumes under another only if these stay the same.
+_STATE_LAYOUT = {
+    "running_user_stats": (
+        "n long, total double",
+        "user_id long, n_events long, total_value double", "update"),
+    "streaming_conversion_lag": (
+        "f_us long, conv long", "u long, f_us long, lag_us long", "update"),
+    "streaming_cusum": (
+        "last_seq long, s string",
+        "day long, rev double, cusum double, flag int", "append"),
+    "streaming_ewma": (
+        "last_seq long, e string",
+        "y long, day long, rev double, ewma double", "append"),
+    "streaming_expanding_zscore": (
+        "n long, sx string, sxx string",
+        "event_id long, key long, n_prev long, zraw double", "append"),
+    "streaming_gapfill_locf": (
+        "last_bucket long, last_value double",
+        "user_id long, bucket long, value double, is_gap int", "append"),
+    "streaming_holt": (
+        "last_seq long, l string, b string",
+        "y long, day long, rev double, level double, trend double, "
+        "forecast double", "append"),
+    "streaming_m4": (
+        "n long, v_first double, v_last double, k_first string, "
+        "k_last string, v_min double, v_max double",
+        "user_id long, bucket long, n long, v_first double, v_last double, "
+        "v_min double, v_max double", "update"),
+    "streaming_new_vs_returning": (
+        "first_p long, last_p long",
+        "user_id long, period long, is_new boolean", "append"),
+    "streaming_rfm_state": (
+        "last_us long, freq long, mon string",
+        "cust long, last_order_us long, frequency long, mon string",
+        "update"),
+    "streaming_session_paths": (
+        "last_ts long, d int, path string",
+        "path string, depth int, n_sessions long", "append"),
+    "streaming_sprt": (
+        "last_seq long, llr string",
+        "day long, n_users long, n_converted long, llr double, "
+        "decision string", "append"),
+    "streaming_time_weighted": (
+        "last_ts long, last_eid long, last_v6 long, n long, den long, "
+        "num string",
+        "key long, n_intervals long, span_us long, wsum_e6 string",
+        "update"),
+    "streaming_transitions": (
+        "ts long, event_id long, t string",
+        "user_id long, from_type string, to_type string, n long", "append"),
+}
+
+
+def test_stateful_state_layout_unchanged(spark, events_stream, monkeypatch):
+    """Every applyInPandasWithState twin hands Spark the state schema,
+    output schema and output mode recorded in `_STATE_LAYOUT`, so
+    checkpoints written before a refactor of the fold still resume."""
+    from pyspark.sql.group import GroupedData
+
+    from gpu_bdb_spark.streaming import stateful
+
+    _, stream = events_stream
+    got = {}
+
+    def capture(self, func, outputStructType, stateStructType, outputMode,
+                timeoutConf):
+        got[name] = (stateStructType, outputStructType, outputMode)
+
+    monkeypatch.setattr(GroupedData, "applyInPandasWithState", capture)
+    for name, build in _STATEFUL_BUILDS.items():
+        if name != "running_user_stats_tws":  # transformWithState API
+            build(getattr(stateful, name), stream)
+    assert got == _STATE_LAYOUT

@@ -1,8 +1,9 @@
 """Deduplication operators for large-scale corpus curation (extension
 surface required by BASELINE.json beyond the reference's own operators).
 
-Four tiers, all expressed with built-in columnar expressions (no Python
-UDFs), each designed for the 100 TB case:
+Four tiers, each designed for the 100 TB case. The n-gram tiers share
+one shingle producer, `shingle_sets` (a vectorized mapInArrow pass that
+owns the tokenizer); everything else is built-in columnar expressions.
 
 * exact        — md5-of-normalized-text grouping (one shuffle on the hash).
 * n-gram Jaccard — shingle-set self-join; exact but quadratic in collision
@@ -22,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gpu_bdb_spark.functions import tokenize
-from gpu_bdb_spark.operators.text import fingerprint, ngrams
+from gpu_bdb_spark.operators.text import fingerprint
 
 #: Mersenne prime modulus for the portable Carter–Wegman minhash family.
 #: With h1 < 2^32 and a < 2^30, a·h1 + b < 2^62 + 2^61 < 2^63 — exact
@@ -68,107 +69,23 @@ def exact_duplicates(
 def shingle_sets(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 2
 ) -> DataFrame:
-    """(id, shingles array<string> distinct, n_shingles) per document."""
-    toks = tokenize(text_col)
-    sh = F.array_distinct(ngrams(toks, n))
-    return df.select(
-        F.col(id_col).alias("id"),
-        sh.alias("shingles"),
-        F.size(sh).cast("long").alias("n_shingles"),
-    )
+    r"""(id long, shingles array<string>, n_shingles long): each
+    document's DISTINCT word n-grams — the one shingle producer of the
+    dedup family; every posting is `explode(shingles)`.
 
+    Tokenizer: RE2 `\s+` split with empty tokens dropped, i.e. tokens
+    are separated by runs of [\t\n\f\r ] — the same split the DuckDB
+    oracles' `string_split_regex(text, '\s+')` makes. `\x0B`, `\u00a0`
+    and `\u2028` are token characters, not separators. An n-gram is its
+    n consecutive tokens joined by one space.
 
-def jaccard_pairs(
-    shingled: DataFrame, threshold: float, id_col: str = "id",
-    max_df: int | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard over all colliding pairs: explode shingles,
-    self-join on shingle, count intersections, compute
-    |A∩B| / (|A|+|B|−|A∩B|).
+    A document with zero shingles (NULL or empty text, fewer than n
+    tokens) gets NO row. That changes no pair output: such a document
+    has no signature and no set size in any consumer.
 
-    Exact but worst-case quadratic inside a shingle's posting list — at
-    100 TB use `minhash_lsh_pairs` to generate candidates and this only to
-    verify. Returns (id_1, id_2, jaccard) with id_1 < id_2, jaccard
-    rounded to 6 (cross-engine float discipline).
-
-    `max_df` (round 12, the winnowing stop-fingerprint precedent):
-    shingles with posting-list df > max_df are STOP-SHINGLES, removed
-    from the sets before anything else — Jaccard is then computed
-    (exactly, same pipeline) over the informative shingles only, and
-    per-shingle join work is bounded at max_df². This is the standard
-    df-cap every production near-dup stack applies: a feature present
-    in >max_df documents separates nothing. On the sf1zipf corpus 57
-    of 1.48M shingles carried 80% of the quadratic join work — and a
-    hot-shingle posting list lands its df² pairs in ONE join task, so
-    uncapped the plan stragglers/OOMs regardless of total work. The
-    cap is vacuous at every driver SF (max bigram df 338 at sf0.1 →
-    output identical to uncapped). None = unchanged exhaustive
-    behavior.
-
-    CONSTRUCTION-TIME JOB (ADVICE r10): when `max_df` is set, building
-    this DataFrame runs an EAGER Spark job (the persisted df aggregate
-    + a one-row collect) before returning — the repo's collect-boundary
-    pattern. Plan-only callers (explain/plan audits) therefore execute
-    a corpus-wide aggregate; callers outside the registry wrapper also
-    inherit the posting/vocab persists until the next entry's cache
-    boundary (or their own clearCache) releases them.
-
-    Round-10 shape changes (guide §2.4/§2.5, all output-identical):
-    * The per-shingle df aggregate is computed ONCE (persisted,
-      vocab-sized) and a one-row collect reads max(df) and the exact
-      pair work Σ_kept C(df,2) off it. When max(df) ≤ max_df the cap
-      is VACUOUS — the stop-shingle merge join (and its two sorts) is
-      skipped outright, which is every driver SF by measurement; the
-      filtered corpora where it binds keep the identical pipeline.
-    * Round 11: the exploded POSTING is persisted (DISK_ONLY) before
-      the stat job, because the stat collect and the main query are
-      separate ACTIONS — ReusedExchange dedups identical subtrees only
-      within one job, so the corpus-wide tokenize+ngrams+explode ran
-      TWICE per query (measured the dominant cost at sf1zipf: 10.1 s
-      of the 33.1 s wall was the second explode; guide §1.2 "don't
-      compute what you throw away", §5 persist-on-reuse-across-jobs).
-      DISK_ONLY because the posting is corpus-sized — iterative/reused
-      frames must not pin the protected storage fraction (round-14
-      rule). The registry's per-entry cache boundary releases it.
-    * The pair-aggregate repartition is sized from that measured pair
-      work (ceil(pw / 200k rows-per-task), clamped [8, 4096]) instead
-      of a flat 256 — the same state-bounding guarantee at sf1zipf
-      (~50M pair rows → ~250 parts) without scheduling 256 near-empty
-      tasks at the small SFs (round-13 OOM class, now data-adaptive).
-    * The posting self-join takes BOTH sides from one plan (alias, no
-      renames) so the shingle-key exchange is planned once and
-      ReusedExchange serves the second side — renames defeat plan
-      canonicalization (the round-6 frequent_triples lesson).
-    """
-    posting = shingled.select(
-        F.col(id_col).alias("id"), F.explode("shingles").alias("shingle")
-    )
-    sizes_vacuous = shingled.select(F.col(id_col).alias("id"), "n_shingles")
-    return _jaccard_pairs_from_posting(posting, sizes_vacuous, threshold,
-                                       max_df)
-
-
-def shingle_posting(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    n: int = 2,
-) -> DataFrame:
-    r"""(id, shingle) posting — per-document DISTINCT word n-grams,
-    exploded — computed in ONE vectorized mapInArrow pass (round 11,
-    guide §4.2): pyarrow regex split, offset-shifted n-gram join, and a
-    C++ hash group-by for the per-doc distinct.
-
-    Output is multiset-identical to
-    `shingle_sets(df).select(id, explode(shingles))` (pinned in
-    tests/test_dedup.py, exceptAll both directions) — the JVM form's
-    chained zip_with concat runs one interpreted lambda eval per
-    element, measured 9.8 s vs 1.9 s for this pass over the 2.7M-row
-    Zipf-corpus posting (sf0.1: 1.15 s vs 0.33 s). Tokenization is RE2
-    \s+ (pyarrow) vs Java \s+ in the JVM form — identical on every
-    corpus (both = [ \t\n\x0B\f\r] modulo \x0B, absent from
-    word-vocabulary fixtures) and the closer match to the DuckDB
-    oracles, which split with RE2 semantics too.
-
-    Arrow types are pinned int64/string (the round-5 mapInArrow rule);
+    One vectorized mapInArrow pass per Arrow batch: regex split,
+    offset-shifted n-gram join, and a hash group-by collecting each
+    document's distinct n-grams. Arrow types are pinned int64/string;
     the closure is self-contained (ships by value)."""
 
     def fn(it):
@@ -177,85 +94,81 @@ def shingle_posting(
         import pyarrow.compute as pc
 
         for batch in it:
-            ids = batch.column(0)
-            texts = batch.column(1)
-            lists = pc.split_pattern_regex(texts, r"\s+")
+            lists = pc.split_pattern_regex(batch.column(1), r"\s+")
             flat = pc.list_flatten(lists)
             counts = pc.list_value_length(lists).fill_null(0).to_numpy(
                 zero_copy_only=False)
             mask = pc.not_equal(flat, "")
             docidx = np.repeat(
                 np.arange(len(counts), dtype=np.int64), counts)
-            keep = mask.to_numpy(zero_copy_only=False)
             toks = flat.filter(mask)
-            docidx = docidx[keep]
-            empty = pa.record_batch(
-                [pa.array([], type=pa.int64()),
-                 pa.array([], type=pa.string())],
-                names=["id", "shingle"])
-            if len(docidx) == 0:
-                yield empty
-                continue
-            if n == 1:
-                grams, gdoc = toks, docidx
-            else:
+            docidx = docidx[mask.to_numpy(zero_copy_only=False)]
+            if n > 1:
                 same = docidx[: 1 - n] == docidx[n - 1:]
-                if not same.any():
-                    yield empty
-                    continue
-                cols = [toks.slice(j, len(toks) - (n - 1))
+                cols = [toks.slice(j, max(0, len(toks) - (n - 1)))
                         .filter(pa.array(same)) for j in range(n)]
                 args = []
                 for j, c in enumerate(cols):
                     if j:
                         args.append(" ")
                     args.append(c)
-                grams = pc.binary_join_element_wise(*args, "")
-                gdoc = docidx[: 1 - n][same]
-            idarr = ids.to_numpy(zero_copy_only=False)
-            t = pa.table({"id": pa.array(idarr[gdoc], type=pa.int64()),
-                          "shingle": grams})
-            for b in t.group_by(["id", "shingle"]).aggregate([])                     .to_batches():
-                yield b
+                toks = pc.binary_join_element_wise(*args, "")
+                docidx = docidx[: 1 - n][same]
+            if len(docidx) == 0:
+                continue
+            ids = batch.column(0).to_numpy(zero_copy_only=False)
+            sets = pa.table(
+                {"id": pa.array(ids[docidx], type=pa.int64()),
+                 "shingle": toks}
+            ).group_by("id").aggregate([("shingle", "distinct")])
+            shingles = sets.column("shingle_distinct")
+            yield from pa.table({
+                "id": sets.column("id"), "shingles": shingles,
+                "n_shingles": pc.list_value_length(shingles).cast(pa.int64()),
+            }).to_batches()
 
     return df.select(id_col, text_col).mapInArrow(
-        fn, schema="id long, shingle string")
+        fn, schema="id long, shingles array<string>, n_shingles long")
 
 
-def jaccard_pairs_text(
-    df: DataFrame, threshold: float, text_col: str = "text",
-    id_col: str = "doc_id", max_df: int | None = None, n: int = 2,
+def jaccard_pairs(
+    shingled: DataFrame, threshold: float, id_col: str = "id",
+    max_df: int | None = None,
 ) -> DataFrame:
-    """`jaccard_pairs` built straight from text via the vectorized
-    `shingle_posting` producer — identical output (same pair pipeline,
-    posting multiset-equal), ~5x cheaper posting construction on the
-    Zipf corpus. Set sizes |A| are counted from the posting itself
-    (per-doc distinct shingle count): docs with zero shingles get no
-    sizes row, which cannot change the output — a doc without postings
-    can never appear in a candidate pair. Same construction-time stat
-    job + persist lifecycle as `jaccard_pairs(max_df=...)`."""
-    posting = shingle_posting(df, text_col, id_col, n=n)
-    sizes_vacuous = posting.groupBy("id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_shingles"))
-    return _jaccard_pairs_from_posting(posting, sizes_vacuous, threshold,
-                                       max_df)
+    """Exact n-gram Jaccard over all colliding pairs of a `shingle_sets`
+    frame: explode shingles into an (id, shingle) posting, self-join on
+    shingle, count intersections, compute |A∩B| / (|A|+|B|−|A∩B|) with
+    set sizes counted from the posting itself.
 
+    Exact but worst-case quadratic inside a shingle's posting list — at
+    100 TB use `minhash_lsh_pairs` to generate candidates and this only to
+    verify. Returns (id_1, id_2, jaccard) with id_1 < id_2, jaccard
+    rounded to 6 (cross-engine float discipline).
 
-def _jaccard_pairs_from_posting(
-    posting: DataFrame, sizes_vacuous: DataFrame, threshold: float,
-    max_df: int | None,
-) -> DataFrame:
-    """Shared pair pipeline over an (id, shingle) posting: optional
-    df-cap stat job + stop-shingle arm, merge self-join, sized pair
-    aggregate, sizes joins, threshold cut (see `jaccard_pairs` for the
-    full design notes). `sizes_vacuous` supplies (id, n_shingles) when
-    the cap does not bind (the capped arm counts sizes off the capped
-    posting itself)."""
+    `max_df`: shingles with posting-list df > max_df are STOP-SHINGLES,
+    removed from the sets before anything else — Jaccard is then
+    computed exactly over the informative shingles only, and per-shingle
+    join work is bounded at max_df². A feature present in more than
+    max_df documents separates nothing, and a hot shingle's df² pairs
+    would otherwise land in ONE join task. None = exhaustive.
+
+    CONSTRUCTION-TIME JOB: when `max_df` is set, building this DataFrame
+    runs an EAGER Spark job (the per-shingle df aggregate + a one-row
+    collect of max(df) and the pair work Σ_kept C(df,2)) before
+    returning. The posting is persisted DISK_ONLY first, so the stat job
+    and the main query share one shingle pass; callers outside the
+    registry wrapper keep that persist until their own clearCache or the
+    next entry's cache boundary. When max(df) ≤ max_df the cap is
+    vacuous and the stop-shingle join is skipped. The pair aggregate is
+    repartitioned to ceil(pair work / 200k) parts, clamped [8, 4096].
+    """
+    posting = shingled.select(
+        F.col(id_col).alias("id"), F.explode("shingles").alias("shingle"))
     parts = None
     if max_df is not None:
         from pyspark.storagelevel import StorageLevel
 
-        # One explode for BOTH actions (stat job + main query); the
+        # One shingle pass for BOTH actions (stat job + main query); the
         # stat collect below materializes the cache as a side effect.
         posting = posting.persist(StorageLevel.DISK_ONLY)
         vocab_df = (posting.groupBy("shingle")
@@ -282,21 +195,20 @@ def _jaccard_pairs_from_posting(
         if max_df_seen > max_df:
             keep = vocab_df.filter(F.col("_df") <= max_df).select("shingle")
             posting = posting.join(keep.hint("merge"), "shingle")
-            sizes = posting.groupBy(F.col("id")).agg(
-                F.count(F.lit(1)).cast("long").alias("n_shingles"))
         else:
             # cap vacuous: identical output without the stop-shingle
             # join; the df aggregate has served its purpose
             vocab_df.unpersist()
-            sizes = sizes_vacuous
-    else:
-        sizes = sizes_vacuous
+    sizes = posting.groupBy("id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_shingles"))
     # merge-join pin: the posting frame is corpus-cardinality — a
-    # planner broadcast of it OOMs a default-memory session at sf1
-    # (the round-9 class), and shuffle_hash's per-partition build map
-    # cannot spill (measured: "not enough memory to build hash map" on
-    # sf1zipf under the 1g driver session). Sort-merge spills — the
-    # only join that survives an arbitrary-memory session here.
+    # planner broadcast of it OOMs a default-memory session at sf1,
+    # and shuffle_hash's per-partition build map cannot spill
+    # (measured: "not enough memory to build hash map" on sf1zipf
+    # under the 1g driver session). Sort-merge spills — the only join
+    # that survives an arbitrary-memory session here. Both sides come
+    # from one plan (alias, no renames) so the shingle-key exchange is
+    # planned once and ReusedExchange serves the second side.
     pl = posting.alias("_jpl")
     pr = posting.alias("_jpr")
     paired = (
@@ -330,37 +242,18 @@ def _jaccard_pairs_from_posting(
 def minhash_signatures(
     shingled: DataFrame, num_hashes: int = 32
 ) -> DataFrame:
-    """MinHash signatures (id, mh_0..mh_{k-1}) from shingle sets.
+    """MinHash signatures (id, mh_0..mh_{k-1}) from a `shingle_sets`
+    frame: mh_i = min over the doc's shingles of
+    xxhash64(i, xxhash64(shingle)).
 
-    Shape matters for speed: explode the (once-)hashed shingles into a
-    posting list and take the k per-seed minima in ONE hash aggregate —
-    whole-stage-codegen'd, with map-side partial mins. The
-    array-expression formulation (array_min ∘ transform per seed) runs in
-    the interpreted higher-order-function evaluator and was ~10× slower
-    at bench. Docs with empty shingle sets produce no row here.
+    Explode, hash each shingle once, then take the k per-seed minima in
+    ONE hash aggregate — whole-stage-codegen'd, with map-side partial
+    mins. Docs with empty shingle sets produce no row here.
     """
-    posting = shingled.select(
-        F.col("id"),
-        F.explode(
-            F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
-        ).alias("h"),
+    posting = (
+        shingled.select("id", F.explode("shingles").alias("shingle"))
+        .select("id", F.xxhash64("shingle").alias("h"))
     )
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    return posting.groupBy("id").agg(*aggs)
-
-
-def minhash_signatures_from_posting(
-    posting: DataFrame, num_hashes: int = 32
-) -> DataFrame:
-    """MinHash signatures from a pre-built hashed posting (id, h) with
-    h = xxhash64(shingle) — value-identical to `minhash_signatures`
-    over the same shingle multiset (pinned in tests/test_dedup.py).
-    Round 11: lets the signature aggregate consume the vectorized
-    `shingle_posting` producer instead of the interpreted JVM array
-    pipeline (sig stage 5.5 -> 2.5 s on the Zipf corpus)."""
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"mh_{i}")
         for i in range(num_hashes)
@@ -373,7 +266,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 16,
     threshold: float = 0.5,
-    hashed_posting: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH candidate generation, exact-Jaccard verified.
 
@@ -397,9 +289,7 @@ def minhash_lsh_pairs(
     # walks lesson again). Contrast minhash_lsh_verified_portable, whose
     # md5 signature stage IS expensive enough to persist. Re-execution
     # is deterministic (xxhash64 over deterministic arrays).
-    signed = (minhash_signatures_from_posting(hashed_posting, num_hashes)
-              if hashed_posting is not None
-              else minhash_signatures(shingled, num_hashes))
+    signed = minhash_signatures(shingled, num_hashes)
     # One pass: emit every band's (band, band_hash) from a single projection
     # and explode — a per-band union would re-evaluate the signature
     # expressions once per band (observed 16× cost at bench time).
@@ -535,8 +425,7 @@ def minhash_lsh_verified_portable(
     return lsh_verified_pairs_portable(
         shingled, num_hashes=num_hashes, bands=bands,
         threshold_num=threshold_num, threshold_den=threshold_den,
-        min_band_matches=min_band_matches,
-        raw_posting=shingle_posting(df, text_col, id_col, n=n))
+        min_band_matches=min_band_matches)
 
 
 def lsh_verified_pairs_portable(
@@ -547,7 +436,6 @@ def lsh_verified_pairs_portable(
     threshold_den: int = 5,
     pair_work_budget: int | None = None,
     min_band_matches: int = 1,
-    raw_posting: DataFrame | None = None,
 ) -> DataFrame:
     """The portable LSH-candidate + exact-integer-verify pipeline over
     an ARBITRARY pre-built set frame (id, members array<string>,
@@ -614,12 +502,9 @@ def lsh_verified_pairs_portable(
     # independent multipliers restore the min-wise property
     # (test_dedup.py::test_minhash_portable_estimates_jaccard).
     h1 = F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("long")
-    # raw_posting (round 11): a pre-built (id, shingle) posting — e.g.
-    # the vectorized `shingle_posting` producer — replaces the member
-    # explode; the md5/CW mapping below is identical either way.
-    base = raw_posting if raw_posting is not None else shingled.select(
-        F.col("id"), F.explode("members").alias("shingle"))
-    sh_posting = base.select("id", h1.alias("h1"))
+    sh_posting = shingled.select(
+        F.col("id"), F.explode("members").alias("shingle")
+    ).select("id", h1.alias("h1"))
     cw = minhash_cw_constants(num_hashes)
     # Persist: the band self-join plans two scans of this subtree —
     # narrow frame (id + num_hashes longs); the registry boundary
@@ -1260,13 +1145,8 @@ def minhash_signatures_portable(
 
     Returns (id, sig_0 … sig_{num_hashes-1}) as 32-bit min-hashes.
     """
-    sh = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.array_distinct(ngrams(tokenize(text_col), n)))
-            .alias("shingle"),
-        )
-    )
+    sh = shingle_sets(df, text_col, id_col, n=n).select(
+        "id", F.explode("shingles").alias("shingle"))
     # Carter–Wegman family: ONE md5 per shingle → h1, then
     # sig_i = min((a_i·h1 + b_i) mod 2^61−1) — num_hashes× fewer md5
     # evals than the old per-(seed, shingle) form, same

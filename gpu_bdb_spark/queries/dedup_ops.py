@@ -18,7 +18,7 @@ from gpu_bdb_spark.operators.dedup import (
     duplicate_clusters,
     duplicate_clusters_star,
     exact_duplicates,
-    jaccard_pairs_text,
+    jaccard_pairs,
     minhash_lsh_pairs,
     shingle_sets,
     simhash64,
@@ -125,8 +125,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = read_table(spark, sf_dir, "documents", ["doc_id", "text"],
                    hint_broadcast=False)
-    return jaccard_pairs_text(d, 0.6, "text", "doc_id",
-                              max_df=JACCARD_MAX_DF)
+    return jaccard_pairs(shingle_sets(d, "text", "doc_id"), 0.6,
+                         max_df=JACCARD_MAX_DF)
 
 
 @register("dedup_minhash_lsh", tags=("dedup", "minhash", "lsh"), bench=True)
@@ -138,19 +138,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence to `dedup_ngram_jaccard` (modulo LSH recall) is asserted in
     tests/test_dedup.py.
     """
-    from gpu_bdb_spark.operators.dedup import shingle_posting
-
     d = read_table(spark, sf_dir, "documents", ["doc_id", "text"],
                    hint_broadcast=False)
-    shingled = shingle_sets(d, "text", "doc_id", n=2)
-    # round 11: the signature aggregate consumes the vectorized posting
-    # producer (guide 4.2) — output-identical (exceptAll-pinned), sig
-    # stage 5.5 -> 2.5 s on the Zipf corpus; the verify re-attach keeps
-    # the JVM array form (array_intersect needs the sets).
-    hashed = shingle_posting(d, "text", "doc_id", n=2).select(
-        "id", F.xxhash64("shingle").alias("h"))
-    return minhash_lsh_pairs(shingled, num_hashes=32, bands=16,
-                             threshold=0.6, hashed_posting=hashed)
+    return minhash_lsh_pairs(shingle_sets(d, "text", "doc_id"), 32, 16, 0.6)
 
 
 #: Band collisions a candidate pair needs before the exact verify, in
@@ -406,8 +396,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below would otherwise re-materialize it (concurrently, per cold
     # cache reference), which heap-OOMs a default-memory session at
     # sf1zipf while the pipeline alone passes (round 12)
-    pairs = jaccard_pairs_text(d, 0.6, "text", "doc_id",
-                               max_df=JACCARD_MAX_DF).localCheckpoint()
+    pairs = jaccard_pairs(shingle_sets(d, "text", "doc_id"), 0.6,
+                          max_df=JACCARD_MAX_DF).localCheckpoint()
     return duplicate_clusters(pairs)
 
 
@@ -439,8 +429,8 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below would otherwise re-materialize it (concurrently, per cold
     # cache reference), which heap-OOMs a default-memory session at
     # sf1zipf while the pipeline alone passes (round 12)
-    pairs = jaccard_pairs_text(d, 0.6, "text", "doc_id",
-                               max_df=JACCARD_MAX_DF).localCheckpoint()
+    pairs = jaccard_pairs(shingle_sets(d, "text", "doc_id"), 0.6,
+                          max_df=JACCARD_MAX_DF).localCheckpoint()
     return duplicate_clusters_star(pairs)
 
 
@@ -813,8 +803,8 @@ def pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below would otherwise re-materialize it (concurrently, per cold
     # cache reference), which heap-OOMs a default-memory session at
     # sf1zipf while the pipeline alone passes (round 12)
-    pairs = jaccard_pairs_text(d, 0.6, "text", "doc_id",
-                               max_df=JACCARD_MAX_DF).localCheckpoint()
+    pairs = jaccard_pairs(shingle_sets(d, "text", "doc_id"), 0.6,
+                          max_df=JACCARD_MAX_DF).localCheckpoint()
     return pagerank(pairs, iters=6, damping=0.85)
 
 

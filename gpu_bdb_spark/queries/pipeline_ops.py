@@ -494,7 +494,7 @@ def leakage_safe_split_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit, so no eval document has a near-copy in train. Exact oracle:
     the recursive-CTE cluster closure + the same md5 threshold rule."""
     from gpu_bdb_spark.operators.dedup import (duplicate_clusters,
-                                               jaccard_pairs_text)
+                                               jaccard_pairs, shingle_sets)
     from gpu_bdb_spark.queries.dedup_ops import JACCARD_MAX_DF
     from gpu_bdb_spark.operators.sampling import leakage_safe_split
 
@@ -505,8 +505,8 @@ def leakage_safe_split_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below would otherwise re-materialize it (concurrently, per cold
     # cache reference), which heap-OOMs a default-memory session at
     # sf1zipf while the pipeline alone passes (round 12)
-    pairs = jaccard_pairs_text(d, 0.6, "text", "doc_id",
-                               max_df=JACCARD_MAX_DF).localCheckpoint()
+    pairs = jaccard_pairs(shingle_sets(d, "text", "doc_id"), 0.6,
+                          max_df=JACCARD_MAX_DF).localCheckpoint()
     return leakage_safe_split(d, duplicate_clusters(pairs), 0.9)
 
 

@@ -754,26 +754,27 @@ def streaming_ewma(
 
         import pandas as _pd
 
-        _dec.getcontext().prec = 50  # chain values never context-round
-        q9 = _dec.Decimal("1e-9")
-        q6 = _dec.Decimal("1e-6")  # output scale; chain carries 9
-        a = _dec.Decimal(a_str)
-        b = _dec.Decimal(1) - a
-        last_seq, e_s = st
-        e = _dec.Decimal(e_s) if e_s else None
-        out_seq, out_val, out_e = [], [], []
-        for s_, v in zip(pdf[seq_col], pdf[val_col]):
-            x = _dec.Decimal(v)
-            e = x if e is None else (a * x + b * e).quantize(
-                q9, rounding=_dec.ROUND_HALF_UP)
-            last_seq = int(s_)
-            out_seq.append(int(s_))
-            out_val.append(float(x))
-            out_e.append(float(e.quantize(q6, rounding=_dec.ROUND_HALF_UP)))
-        return (last_seq, str(e) if e is not None else ""), _pd.DataFrame({
-            "y": [key[0]] * len(out_seq), "day": out_seq,
-            "rev": out_val, "ewma": out_e,
-        })
+        with _dec.localcontext(prec=50):  # chain values never context-round
+            q9 = _dec.Decimal("1e-9")
+            q6 = _dec.Decimal("1e-6")  # output scale; chain carries 9
+            a = _dec.Decimal(a_str)
+            b = _dec.Decimal(1) - a
+            last_seq, e_s = st
+            e = _dec.Decimal(e_s) if e_s else None
+            out_seq, out_val, out_e = [], [], []
+            for s_, v in zip(pdf[seq_col], pdf[val_col]):
+                x = _dec.Decimal(v)
+                e = x if e is None else (a * x + b * e).quantize(
+                    q9, rounding=_dec.ROUND_HALF_UP)
+                last_seq = int(s_)
+                out_seq.append(int(s_))
+                out_val.append(float(x))
+                out_e.append(float(e.quantize(
+                    q6, rounding=_dec.ROUND_HALF_UP)))
+            return (last_seq, str(e) if e is not None else ""), _pd.DataFrame({
+                "y": [key[0]] * len(out_seq), "day": out_seq,
+                "rev": out_val, "ewma": out_e,
+            })
 
     return _apply_with_state(
         rows, key_col, step,
@@ -865,44 +866,44 @@ def streaming_holt(
 
         import pandas as _pd
 
-        _dec.getcontext().prec = 50
-        q9 = _dec.Decimal("1e-9")
-        q6 = _dec.Decimal("1e-6")
-        a = _dec.Decimal(a_str)
-        ac = _dec.Decimal(1) - a
-        bt = _dec.Decimal(b_str)
-        bc = _dec.Decimal(1) - bt
-        last_seq, l_s, b_s = st
-        lv = _dec.Decimal(l_s) if l_s else None
-        tr = _dec.Decimal(b_s) if b_s else None
-        out = {k: [] for k in ("seq", "val", "level", "trend", "forecast")}
-        for s_, v in zip(pdf[seq_col], pdf[val_col]):
-            x = _dec.Decimal(v)
-            if lv is None:
-                lv = x.quantize(q9)
-                tr = _dec.Decimal(0).quantize(q9)
-            else:
-                prev = lv
-                lv = (a * x + ac * (prev + tr)).quantize(
-                    q9, rounding=_dec.ROUND_HALF_UP)
-                tr = (bt * (lv - prev) + bc * tr).quantize(
-                    q9, rounding=_dec.ROUND_HALF_UP)
-            last_seq = int(s_)
-            out["seq"].append(int(s_))
-            out["val"].append(float(x))
-            out["level"].append(float(lv.quantize(
-                q6, rounding=_dec.ROUND_HALF_UP)))
-            out["trend"].append(float(tr.quantize(
-                q6, rounding=_dec.ROUND_HALF_UP)))
-            out["forecast"].append(float((lv + tr).quantize(
-                q6, rounding=_dec.ROUND_HALF_UP)))
-        st = (last_seq, str(lv) if lv is not None else "",
-              str(tr) if tr is not None else "")
-        return st, _pd.DataFrame({
-            "y": [key[0]] * len(out["seq"]), "day": out["seq"],
-            "rev": out["val"], "level": out["level"],
-            "trend": out["trend"], "forecast": out["forecast"],
-        })
+        with _dec.localcontext(prec=50):
+            q9 = _dec.Decimal("1e-9")
+            q6 = _dec.Decimal("1e-6")
+            a = _dec.Decimal(a_str)
+            ac = _dec.Decimal(1) - a
+            bt = _dec.Decimal(b_str)
+            bc = _dec.Decimal(1) - bt
+            last_seq, l_s, b_s = st
+            lv = _dec.Decimal(l_s) if l_s else None
+            tr = _dec.Decimal(b_s) if b_s else None
+            out = {k: [] for k in ("seq", "val", "level", "trend", "forecast")}
+            for s_, v in zip(pdf[seq_col], pdf[val_col]):
+                x = _dec.Decimal(v)
+                if lv is None:
+                    lv = x.quantize(q9)
+                    tr = _dec.Decimal(0).quantize(q9)
+                else:
+                    prev = lv
+                    lv = (a * x + ac * (prev + tr)).quantize(
+                        q9, rounding=_dec.ROUND_HALF_UP)
+                    tr = (bt * (lv - prev) + bc * tr).quantize(
+                        q9, rounding=_dec.ROUND_HALF_UP)
+                last_seq = int(s_)
+                out["seq"].append(int(s_))
+                out["val"].append(float(x))
+                out["level"].append(float(lv.quantize(
+                    q6, rounding=_dec.ROUND_HALF_UP)))
+                out["trend"].append(float(tr.quantize(
+                    q6, rounding=_dec.ROUND_HALF_UP)))
+                out["forecast"].append(float((lv + tr).quantize(
+                    q6, rounding=_dec.ROUND_HALF_UP)))
+            st = (last_seq, str(lv) if lv is not None else "",
+                  str(tr) if tr is not None else "")
+            return st, _pd.DataFrame({
+                "y": [key[0]] * len(out["seq"]), "day": out["seq"],
+                "rev": out["val"], "level": out["level"],
+                "trend": out["trend"], "forecast": out["forecast"],
+            })
 
     return _apply_with_state(
         rows, key_col, step,
@@ -939,25 +940,25 @@ def streaming_sprt(
 
         import pandas as _pd
 
-        _dec.getcontext().prec = 50
-        c1d, c0d = _dec.Decimal(c1_s), _dec.Decimal(c0_s)
-        ad, bd = _dec.Decimal(a_s), _dec.Decimal(b_s)
-        last_seq, llr_s = st
-        llr = _dec.Decimal(llr_s)
-        out = {k: [] for k in
-               ("day", "n_users", "n_converted", "llr", "decision")}
-        for d_, n, k_ in zip(pdf[seq_col], pdf["n_users"],
-                             pdf["n_converted"]):
-            llr += int(k_) * c1d + (int(n) - int(k_)) * c0d
-            last_seq = int(d_)
-            out["day"].append(int(d_))
-            out["n_users"].append(int(n))
-            out["n_converted"].append(int(k_))
-            out["llr"].append(float(llr))
-            out["decision"].append(
-                "accept_h1" if llr >= ad
-                else ("accept_h0" if llr <= bd else "continue"))
-        return (last_seq, str(llr)), _pd.DataFrame(out)
+        with _dec.localcontext(prec=50):
+            c1d, c0d = _dec.Decimal(c1_s), _dec.Decimal(c0_s)
+            ad, bd = _dec.Decimal(a_s), _dec.Decimal(b_s)
+            last_seq, llr_s = st
+            llr = _dec.Decimal(llr_s)
+            out = {k: [] for k in
+                   ("day", "n_users", "n_converted", "llr", "decision")}
+            for d_, n, k_ in zip(pdf[seq_col], pdf["n_users"],
+                                 pdf["n_converted"]):
+                llr += int(k_) * c1d + (int(n) - int(k_)) * c0d
+                last_seq = int(d_)
+                out["day"].append(int(d_))
+                out["n_users"].append(int(n))
+                out["n_converted"].append(int(k_))
+                out["llr"].append(float(llr))
+                out["decision"].append(
+                    "accept_h1" if llr >= ad
+                    else ("accept_h0" if llr <= bd else "continue"))
+            return (last_seq, str(llr)), _pd.DataFrame(out)
 
     return _apply_with_state(
         rows.withColumn("_k", F.lit(0)), "_k", step,

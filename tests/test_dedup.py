@@ -437,61 +437,79 @@ def test_jaccard_pairs_max_df_stop_shingles(spark):
     assert all(k == (1, 2) for k in capped)
 
 
-def test_shingle_posting_arrow_matches_jvm(spark, sf_dir):
-    """round 11: the vectorized mapInArrow posting producer is
-    multiset-identical to explode(shingle_sets(...).shingles) — the
-    exact-equality contract that lets jaccard_pairs_text swap in for
-    jaccard_pairs(shingle_sets(...)) under every oracled entry."""
-    from pyspark.sql import functions as F
+def _oracle_shingles_sql(n: int) -> str:
+    """The oracles' `sh` CTE (documents → distinct word n-grams) for
+    any n; n = 2 is the text every shingle oracle inlines."""
+    gram = " || ' ' || ".join(
+        "toks[i]" if j == 0 else f"toks[i + {j}]" for j in range(n))
+    return (r"""
+WITH t AS (
+  SELECT doc_id,
+         list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks
+  FROM documents
+),
+idx AS (
+  SELECT doc_id, toks, unnest(generate_series(1, len(toks) - """
+            + str(n - 1) + """)) AS i FROM t
+)
+SELECT DISTINCT doc_id AS id, """ + gram + " AS shingle FROM idx")
 
-    from gpu_bdb_spark.operators.dedup import shingle_posting
 
+def test_shingle_sets_matches_oracle_shingles(spark, sf_dir, duck):
+    """explode(shingle_sets(d)) is multiset-equal to the DuckDB `sh`
+    CTE the shingle oracles share, for bigrams and trigrams: the one
+    producer tokenizes exactly as the oracles do."""
+    from gpu_bdb_spark.queries import dedup_ops
+
+    bigram = "toks[i] || ' ' || toks[i + 1] AS shingle"
+    for oracle in (dedup_ops.NGRAM_JACCARD_ORACLE,
+                   dedup_ops._lsh_verified_oracle(),
+                   dedup_ops._minhash_portable_oracle(8)):
+        assert bigram in oracle and r"string_split_regex(text, '\s+')" \
+            in oracle
     d = read_table(spark, sf_dir, "documents", ["doc_id", "text"],
                    hint_broadcast=False)
-    jvm = shingle_sets(d, "text", "doc_id", n=2).select(
-        "id", F.explode("shingles").alias("shingle"))
-    arrow = shingle_posting(d, "text", "doc_id", n=2)
-    assert arrow.exceptAll(jvm).count() == 0
-    assert jvm.exceptAll(arrow).count() == 0
-    # trigram form too (the generic n-gram path)
-    jvm3 = shingle_sets(d, "text", "doc_id", n=3).select(
-        "id", F.explode("shingles").alias("shingle"))
-    arrow3 = shingle_posting(d, "text", "doc_id", n=3)
-    assert arrow3.exceptAll(jvm3).count() == 0
-    assert jvm3.exceptAll(arrow3).count() == 0
+    for n in (2, 3):
+        got = shingle_sets(d, "text", "doc_id", n=n).select(
+            "id", F.explode("shingles").alias("shingle"))
+        want = spark.createDataFrame(
+            duck.execute(_oracle_shingles_sql(n)).df(),
+            "id long, shingle string")
+        assert want.count() > 0, n
+        assert got.exceptAll(want).count() == 0, n
+        assert want.exceptAll(got).count() == 0, n
 
 
-def test_jaccard_pairs_text_matches_array_form(spark, sf_dir):
-    """jaccard_pairs_text(df) == jaccard_pairs(shingle_sets(df)) row
-    for row, capped and uncapped."""
-    from gpu_bdb_spark.operators.dedup import jaccard_pairs_text
+def test_vertical_tab_one_tokenizer_every_stage(spark):
+    r"""A `\x0B` inside a token is a token character on every stage of
+    both LSH tiers, as in the DuckDB oracles: the portable tier equals
+    its oracle over the same rows, and the xxhash tier emits a subset of
+    exact Jaccard with the same values."""
+    import duckdb
+    import pandas as pd
 
-    d = read_table(spark, sf_dir, "documents", ["doc_id", "text"],
-                   hint_broadcast=False)
-    for max_df in (None, 3, 1000):
-        a = sorted(map(tuple, jaccard_pairs(
-            shingle_sets(d, "text", "doc_id", n=2), 0.6,
-            max_df=max_df).collect()))
-        b = sorted(map(tuple, jaccard_pairs_text(
-            d, 0.6, "text", "doc_id", max_df=max_df).collect()))
-        assert a == b, (max_df, len(a), len(b))
+    from gpu_bdb_spark.operators.dedup import minhash_lsh_verified_portable
+    from gpu_bdb_spark.queries.dedup_ops import (LSH_MIN_BAND_MATCHES,
+                                                 _lsh_verified_oracle)
 
+    rows = [(1, "a b c d e f g h"), (2, "a b c d e f g\x0Bh"),
+            (3, "p q r s t u v w"), (4, "p q r s\x0Bt u v w")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = sorted(map(tuple, con.execute(
+        _lsh_verified_oracle()).fetchall()))
+    con.close()
+    assert want == [(1, 2, 0.625)]
+    got = sorted(map(tuple, minhash_lsh_verified_portable(
+        df, "text", "doc_id",
+        min_band_matches=LSH_MIN_BAND_MATCHES).collect()))
+    assert got == want
 
-def test_minhash_signatures_from_posting_matches(spark, sf_dir):
-    """round 11: signatures built from the vectorized posting equal the
-    array-pipeline signatures exactly (same xxhash64 values, same
-    minima)."""
-    from pyspark.sql import functions as F
-
-    from gpu_bdb_spark.operators.dedup import (
-        minhash_signatures, minhash_signatures_from_posting,
-        shingle_posting)
-
-    d = read_table(spark, sf_dir, "documents", ["doc_id", "text"],
-                   hint_broadcast=False)
-    a = minhash_signatures(shingle_sets(d, "text", "doc_id", n=2), 16)
-    b = minhash_signatures_from_posting(
-        shingle_posting(d, "text", "doc_id", n=2).select(
-            "id", F.xxhash64("shingle").alias("h")), 16)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    exact = {(r.id_1, r.id_2): r.jaccard for r in jaccard_pairs(
+        shingle_sets(df, "text", "doc_id"), 0.6).collect()}
+    lsh = {(r.id_1, r.id_2): r.jaccard for r in minhash_lsh_pairs(
+        shingle_sets(df, "text", "doc_id"), 32, 16, 0.6).collect()}
+    assert exact == {(1, 2): 0.625}
+    assert set(lsh) <= set(exact)
+    assert all(v == exact[k] for k, v in lsh.items())

@@ -362,6 +362,17 @@ def test_lsh_verified_candidates_are_bare_ids(spark, sf_dir):
     assert re.search(r"Condition : \(_bm#\d+L? >= 2\)", plan), plan
 
 
+def test_dedup_entries_use_the_one_shingle_producer(spark, sf_dir):
+    """Every n-gram dedup entry builds its shingles with the mapInArrow
+    producer (`shingle_sets`) and never with a JVM zip_with n-gram
+    chain, so all stages of one pipeline share one tokenizer."""
+    for name in ("dedup_minhash_lsh", "dedup_lsh_verified",
+                 "dedup_ngram_jaccard", "minhash_portable"):
+        plan = formatted_plan(all_specs()[name].fn(spark, sf_dir))
+        assert "MapInArrow" in plan and "zip_with" not in plan, (name, plan)
+    spark.catalog.clearCache()
+
+
 def test_rfm_single_fact_aggregate_before_tiles(spark, sf_dir):
     """One hash aggregate on the customer key precedes the ntile
     windows; the single-partition sort runs over the aggregated frame

@@ -10,6 +10,8 @@ groups, ties, single-element arrays), not volume.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -105,6 +107,43 @@ def test_ngrams_matches_python_reference(spark, tokens, n):
     df = spark.createDataFrame([(tokens,)], "toks array<string>")
     got = df.select(ngrams(F.col("toks"), n).alias("g")).collect()[0].g
     assert list(got) == expected
+
+
+#: Separators RE2's `\s` splits on, and characters it does not
+#: (`\x0B`, no-break space, line separator), which stay inside tokens.
+_RE2_SPACE = re.compile(r"[\t\n\f\r ]+")
+_SEPARATORS = st.sampled_from([" ", "\x0B", "\u00a0", "\u2028"]) | st.text(
+    "\t\r\n\f ", min_size=1, max_size=4)
+
+
+@given(
+    docs=st.lists(
+        st.none() | st.builds(
+            lambda toks, seps: "".join(
+                t + s for t, s in zip(toks, seps + [""])),
+            st.lists(st.sampled_from(["a", "b", "c"]), min_size=0,
+                     max_size=6),
+            st.lists(_SEPARATORS, min_size=6, max_size=6)),
+        min_size=1, max_size=6),
+    n=st.sampled_from([1, 2, 3]),
+)
+@settings(**{**SETTINGS, "max_examples": 8})
+def test_shingle_sets_matches_re2_reference(spark, docs, n):
+    r"""shingle_sets splits on RE2's `\s` class and nothing else; NULL,
+    empty, and too-short docs get no row."""
+    from gpu_bdb_spark.operators.dedup import shingle_sets
+
+    want = {}
+    for i, text in enumerate(docs):
+        toks = [t for t in _RE2_SPACE.split(text or "") if t]
+        grams = {" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)}
+        if grams:
+            want[i] = grams
+    df = spark.createDataFrame(list(enumerate(docs)),
+                               "doc_id long, text string")
+    got = {r.id: (set(r.shingles), r.n_shingles, len(r.shingles))
+           for r in shingle_sets(df, "text", "doc_id", n=n).collect()}
+    assert got == {i: (g, len(g), len(g)) for i, g in want.items()}
 
 
 @given(

@@ -104,7 +104,7 @@ def test_zip_stat_installer_rereads_only_changed_archives(tmp_path):
 
 
 _LOAD_SCRIPT = r"""
-import json, pickle, sys, zipimport
+import decimal, json, pickle, sys, zipimport
 
 import pandas as pd
 
@@ -131,6 +131,7 @@ print(json.dumps({
                      if m.split(".")[0] == "gpu_bdb_spark"),
     "stat_checked": getattr(zipimport.zipimporter.invalidate_caches,
                             "stat_checked", False),
+    "prec": decimal.getcontext().prec,
 }))
 """
 
@@ -182,5 +183,6 @@ def test_apply_with_state_udf_ships_by_value(spark, monkeypatch, tmp_path):
     assert shuffled == ascending, res
     assert [r["ewma"] for r in ascending["rows"]] == [50.0, 52.0, 55.6], res
     assert ascending["state"] == [3, "55.600000000"], res
+    assert res["prec"] == 28, res  # the step scoped its 50-digit context
     assert res["leaked"] == [], res
     assert res["stat_checked"] is (sys.version_info < (3, 12)), res

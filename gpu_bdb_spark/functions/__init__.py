@@ -1,4 +1,4 @@
-"""Column-expression helpers shared by queries and operators.
+r"""Column-expression helpers shared by queries and operators.
 
 Exactness discipline
 --------------------
@@ -14,6 +14,21 @@ reference's 6-significant-digit comparisons, utils.py:449-477):
   rounded to 6 decimals on both sides.
 * Timestamp arithmetic is integer microseconds (`unix_micros` here,
   `epoch_us` in DuckDB) under a UTC session time zone.
+
+Text contracts
+--------------
+Two text primitives are defined here once; no other module restates them.
+
+* Token: a maximal run of characters between runs of `TOKEN_SEPARATOR`,
+  `[\t\n\f\r ]+`, empty tokens dropped (`tokenize`). That class means the
+  same thing in Java regex and in RE2, and it is exactly RE2's (so
+  DuckDB's) `\s`: the oracles' `list_filter(string_split_regex(text,
+  '\s+'), x -> x <> '')` makes the same tokens. `\x0B`, `\u00a0` and
+  `\u2028` are token characters, not separators. The JVM `tokenize` and
+  the Arrow `shingle_sets` (operators/dedup.py) both split on it.
+* Portable hash: `md5_long(x, start, n_hex)` is the integer value of
+  `n_hex` hex digits of md5(x) from 1-based `start`, equal to DuckDB's
+  `CAST(concat('0x', substr(md5(x), start, n_hex)) AS BIGINT)`.
 """
 
 from __future__ import annotations
@@ -92,10 +107,19 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot / (norm(ad) * norm(bd))
 
 
-def tokenize(text: str | Column, pattern: str = r"\s+") -> Column:
-    """Whitespace tokenization to array<string>, empty tokens removed.
+#: The token separator (module docstring, "Text contracts").
+TOKEN_SEPARATOR = r"[\t\n\f\r ]+"
 
-    Matches DuckDB `list_filter(string_split_regex(text, '\\s+'), x -> x <> '')`.
-    """
+
+def tokenize(text: str | Column) -> Column:
+    """array<string> of the tokens of `text` (module docstring, "Text
+    contracts"); NULL text gives NULL."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(c, pattern), lambda t: t != "")
+    return F.filter(F.split(c, TOKEN_SEPARATOR), lambda t: t != "")
+
+
+def md5_long(col: str | Column, start: int = 1, n_hex: int = 8) -> Column:
+    """The portable md5 hash as a long (module docstring, "Text
+    contracts"): uniform in [0, 16^n_hex)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.conv(F.substring(F.md5(c), start, n_hex), 16, 10).cast("long")

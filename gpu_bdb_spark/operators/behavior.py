@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gpu_bdb_spark.functions import micros
+from gpu_bdb_spark.functions import md5_long, micros
 
 WEEK_US = 7 * 86_400 * 1_000_000
 
@@ -218,11 +218,8 @@ def ab_test_conversion(
     aggregate collapsed to scalars.
     """
     coin = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(salt),
-                                  F.col(user_col).cast("string"))), 1, 8),
-            16, 10).cast("long"),
+        md5_long(F.concat_ws(":", F.lit(salt),
+                             F.col(user_col).cast("string"))),
         F.lit(2),
     )
     per_user = (

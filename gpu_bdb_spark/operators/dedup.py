@@ -2,8 +2,9 @@
 surface required by BASELINE.json beyond the reference's own operators).
 
 Four tiers, each designed for the 100 TB case. The n-gram tiers share
-one shingle producer, `shingle_sets` (a vectorized mapInArrow pass that
-owns the tokenizer); everything else is built-in columnar expressions.
+one shingle producer, `shingle_sets` (a vectorized mapInArrow pass over
+the tokens of `functions.tokenize`); everything else is built-in
+columnar expressions.
 
 * exact        — md5-of-normalized-text grouping (one shuffle on the hash).
 * n-gram Jaccard — shingle-set self-join; exact but quadratic in collision
@@ -22,7 +23,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gpu_bdb_spark.functions import tokenize
+from gpu_bdb_spark.functions import TOKEN_SEPARATOR, md5_long, tokenize
 from gpu_bdb_spark.operators.text import fingerprint
 
 #: Mersenne prime modulus for the portable Carter–Wegman minhash family.
@@ -73,11 +74,9 @@ def shingle_sets(
     document's DISTINCT word n-grams — the one shingle producer of the
     dedup family; every posting is `explode(shingles)`.
 
-    Tokenizer: RE2 `\s+` split with empty tokens dropped, i.e. tokens
-    are separated by runs of [\t\n\f\r ] — the same split the DuckDB
-    oracles' `string_split_regex(text, '\s+')` makes. `\x0B`, `\u00a0`
-    and `\u2028` are token characters, not separators. An n-gram is its
-    n consecutive tokens joined by one space.
+    Tokens are those of `functions.tokenize`: Arrow's RE2 split on the
+    same `TOKEN_SEPARATOR`. An n-gram is its n consecutive tokens joined
+    by one space.
 
     A document with zero shingles (NULL or empty text, fewer than n
     tokens) gets NO row. That changes no pair output: such a document
@@ -94,7 +93,7 @@ def shingle_sets(
         import pyarrow.compute as pc
 
         for batch in it:
-            lists = pc.split_pattern_regex(batch.column(1), r"\s+")
+            lists = pc.split_pattern_regex(batch.column(1), TOKEN_SEPARATOR)
             flat = pc.list_flatten(lists)
             counts = pc.list_value_length(lists).fill_null(0).to_numpy(
                 zero_copy_only=False)
@@ -501,7 +500,7 @@ def lsh_verified_pairs_portable(
     # correlated (measured agreement 2/32 on a J = 0.84 pair); CW's
     # independent multipliers restore the min-wise property
     # (test_dedup.py::test_minhash_portable_estimates_jaccard).
-    h1 = F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("long")
+    h1 = md5_long("shingle")
     sh_posting = shingled.select(
         F.col("id"), F.explode("members").alias("shingle")
     ).select("id", h1.alias("h1"))
@@ -913,8 +912,8 @@ def simhash64_portable(
     carry no ANSI overflow check)."""
     t = df.select(F.col(id_col).alias("id"),
                   F.explode(tokenize(text_col)).alias("token"))
-    h1 = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long")
-    h2 = F.conv(F.substring(F.md5("token"), 9, 8), 16, 10).cast("long")
+    h1 = md5_long("token")
+    h2 = md5_long("token", 9)
     aggs = [
         F.sum(
             F.when(
@@ -1152,7 +1151,7 @@ def minhash_signatures_portable(
     # evals than the old per-(seed, shingle) form, same
     # oracle-replayable arithmetic (see lsh_verified_pairs_portable for
     # why Kirsch–Mitzenmacher is wrong here).
-    h1 = F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("long")
+    h1 = md5_long("shingle")
     cw = minhash_cw_constants(num_hashes)
     return sh.select("id", h1.alias("h1")).groupBy("id").agg(
         *[F.min((F.lit(a) * F.col("h1") + F.lit(b)) % F.lit(_CW_P))

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gpu_bdb_spark.functions import md5_long
+
 
 def pagerank(
     pairs: DataFrame,
@@ -264,13 +266,9 @@ def random_walks(
         F.count(F.lit(1)).cast("long").alias("_deg"))
     for t in range(1, int(walk_length) + 1):
         pick = F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(
-                        ":", F.lit(seed), F.col("walk_id").cast("string"),
-                        F.lit(str(t)), F.col("cur").cast("string"))),
-                    1, 8),
-                16, 10).cast("long"),
+            md5_long(F.concat_ws(
+                ":", F.lit(seed), F.col("walk_id").cast("string"),
+                F.lit(str(t)), F.col("cur").cast("string"))),
             F.col("_deg"),
         )
         stepped = (

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gpu_bdb_spark.functions import md5_long
+
 #: hex granularity: thresholds quantize fractions to 1/16^8 ≈ 6e-10.
 _HEX_DIGITS = 8
 
@@ -34,10 +36,14 @@ def _threshold(fraction: float) -> str:
     return format(n, f"0{_HEX_DIGITS}x")
 
 
+def _key_bytes(key: Column) -> Column:
+    """What a sampling key hashes as: the bytes of its string form."""
+    return key.cast("string").cast("binary")
+
+
 def _hash_slot(key: Column) -> Column:
     """First 8 hex chars of md5(key-as-string) — uniform in [0, 16^8)."""
-    return F.substring(F.md5(key.cast("string").cast("binary")), 1,
-                       _HEX_DIGITS)
+    return F.substring(F.md5(_key_bytes(key)), 1, _HEX_DIGITS)
 
 
 def deterministic_sample(
@@ -96,13 +102,6 @@ def stratified_sample(
     return df.filter(_hash_slot(F.col(key_col)) < thresh)
 
 
-def _hash_num(key: Column) -> Column:
-    """Numeric value of the 8-hex md5 slot — uniform in [0, 16^8), for
-    threshold comparisons computed IN-PLAN (cross-engine: DuckDB
-    `CAST(concat('0x', substr(md5(..),1,8)) AS BIGINT)` agrees)."""
-    return F.conv(_hash_slot(key), 16, 10).cast("long")
-
-
 def domain_mix(
     df: DataFrame,
     strata_col: str,
@@ -141,7 +140,7 @@ def domain_mix(
     )
     return (
         df.join(F.broadcast(fracs), strata_col)
-        .filter(_hash_num(F.col(key_col))
+        .filter(md5_long(_key_bytes(F.col(key_col)))
                 < F.floor(F.col("_frac") * F.lit(float(16 ** _HEX_DIGITS))))
         .drop("_frac")
     )
@@ -173,7 +172,7 @@ def shard_assignments(
     """
     from pyspark.sql import Window
 
-    h = _hash_num(F.col(key_col))
+    h = md5_long(_key_bytes(F.col(key_col)))
     w = Window.partitionBy("shard").orderBy("_h", key_col)
     return (
         df.select(
@@ -256,7 +255,7 @@ def domain_repeat_plan(
     base = F.floor(F.col("_f")).cast("long")
     frac = F.col("_f") - F.floor(F.col("_f"))
     extra = (
-        _hash_num(F.col(key_col))
+        md5_long(_key_bytes(F.col(key_col)))
         < F.floor(frac * F.lit(float(16 ** _HEX_DIGITS)))
     ).cast("long")
     return (
@@ -484,11 +483,8 @@ def farthest_point_sample_parallel(
         tot6 = state.agg(F.sum(r6).alias("t")).collect()[0]["t"] or 0
         batch = state.orderBy(F.desc("d"), F.col("id")).limit(1).collect()
         if tot6 > 0:
-            h = F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.lit("fpsp"), F.lit(r),
-                                      F.col("id"))), 1, 8),
-                16, 10).cast("long")
+            h = md5_long(F.concat_ws(":", F.lit("fpsp"), F.lit(r),
+                                     F.col("id")))
             cut = (
                 h.cast("decimal(19,0)")
                 * F.lit(int(tot6)).cast("decimal(19,0)")
@@ -531,8 +527,8 @@ def weighted_sample_topk(
 
     Returns (id, weight, es_key) for the k selected rows.
     """
-    u = (_hash_num(F.col(key_col)).cast("double") + F.lit(1.0)) / F.lit(
-        float(16 ** _HEX_DIGITS + 1))
+    u = (md5_long(_key_bytes(F.col(key_col))).cast("double")
+         + F.lit(1.0)) / F.lit(float(16 ** _HEX_DIGITS + 1))
     es = F.round(F.pow(u, F.lit(1.0) / weight.cast("double")), 9)
     return (
         df.select(

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gpu_bdb_spark.functions import md5_long
+
 _SCORE_SCHEMA = "query_id long, neighbor_id long, cosine double"
 
 
@@ -582,9 +584,7 @@ def signed_random_projection(
     Returns (id, j, proj): k rows per input vector.
     """
     sign = (1 - 2 * F.pmod(
-        F.conv(F.substring(
-            F.md5(F.concat_ws(":", F.col("j"), F.col("d"))), 1, 8),
-            16, 10).cast("long"),
+        md5_long(F.concat_ws(":", F.col("j"), F.col("d"))),
         F.lit(2))).cast("double")
     spark = df.sparkSession
     planes = (

@@ -14,18 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gpu_bdb_spark.functions import md5_long
+
 
 def _bucket(key, d: int, width: int):
-    """Row d's bucket for a string key: md5('d:key') first 8 hex digits
-    mod width — identical to DuckDB's
-    CAST(concat('0x', substr(md5(...), 1, 8)) AS BIGINT) % width."""
-    return F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(str(d)), key)), 1, 8),
-            16, 10).cast("long"),
-        F.lit(int(width)),
-    )
+    """Row d's bucket for a string key: `md5_long('d:key')` mod width."""
+    return F.pmod(md5_long(F.concat_ws(":", F.lit(str(d)), key)),
+                  F.lit(int(width)))
 
 
 def cms_build(
@@ -122,11 +117,7 @@ def kmv_distinct(
     from pyspark.sql import Window
 
     k = int(k)
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.lit("kmv"), key.cast("string"))),
-            1, 12),
-        16, 10).cast("long")
+    h = md5_long(F.concat_ws(":", F.lit("kmv"), key.cast("string")), 1, 12)
     ranked = df.select(F.col(group_col), h.alias("_h")).withColumn(
         "_dr",
         F.dense_rank().over(

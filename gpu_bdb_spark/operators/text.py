@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gpu_bdb_spark.functions import tokenize
+from gpu_bdb_spark.functions import md5_long, tokenize
 
 #: Stopword markers per language for the n-gram/stopword language-ID
 #: heuristic. Deterministic and SQL-expressible on purpose.
@@ -77,23 +77,25 @@ def ngrams(tokens: Column, n: int, sep: str = " ") -> Column:
 def marker_count(tokens: Column, markers: tuple[str, ...]) -> Column:
     """Count of tokens that appear in a marker list (long)."""
     arr = F.array(*[F.lit(m) for m in markers])
-    return F.size(F.filter(tokens, lambda t: F.array_contains(arr, t))).cast("long")
+    return F.array_size(
+        F.filter(tokens, lambda t: F.array_contains(arr, t))).cast("long")
 
 
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds: tokens (array), n_tokens, n_chars_seen, total_token_len,
-    stopword_cnt — all exact integers."""
+    stopword_cnt — all exact integers, NULL for NULL text; like SQL SUM,
+    total_token_len is NULL for a doc with no tokens."""
     out = df.withColumn("tokens", tokenize(text_col))
     return (
-        out.withColumn("n_tokens", F.size("tokens").cast("long"))
+        out.withColumn("n_tokens", F.array_size("tokens").cast("long"))
         .withColumn("n_chars_seen", F.length(text_col).cast("long"))
         .withColumn(
             "total_token_len",
-            F.aggregate(
+            F.when(F.col("n_tokens") > 0, F.aggregate(
                 F.transform("tokens", lambda t: F.length(t).cast("long")),
                 F.lit(0).cast("long"),
                 lambda acc, x: acc + x,
-            ),
+            )),
         )
         .withColumn("stopword_cnt", marker_count(F.col("tokens"), STOPWORDS))
     )
@@ -135,9 +137,6 @@ def frequency_vocab(df: DataFrame, text_col: str = "text",
     `size` rows, and row_number runs on that dimension-sized result — no
     full-corpus sort."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from gpu_bdb_spark.functions import tokenize
 
     counts = (
         df.select(F.explode(tokenize(text_col)).alias("word"))
@@ -167,10 +166,6 @@ def encode_documents(
     (id, pos, token_id) — O(total tokens), the inherent payload of an
     order-preserving encode. Position rides the shuffle so the sequence
     is exact under any partitioning (collect_list alone is unordered)."""
-    from pyspark.sql import functions as F
-
-    from gpu_bdb_spark.functions import tokenize
-
     words = df.select(
         F.col(id_col),
         F.posexplode(tokenize(text_col)).alias("pos", "word"))
@@ -273,6 +268,24 @@ def term_scores_tfidf(
     )
 
 
+def _hashed_grams(
+    df: DataFrame, text_col: str, id_col: str, k: int
+) -> DataFrame:
+    """The winnowing family's hashed k-gram stage: (id_col, _m, pos, h),
+    one row per word k-gram of the lowered text, `_m` the doc's k-gram
+    count and `h` the portable 32-bit md5 hash of the gram. The doc-key
+    exchange is pinned BEFORE the gram expansion (see
+    `winnow_fingerprints`)."""
+    return df.repartition(F.col(id_col)).select(
+        F.col(id_col),
+        ngrams(tokenize(F.lower(F.col(text_col))), k).alias("grams"),
+    ).select(
+        F.col(id_col),
+        F.size("grams").alias("_m"),
+        F.posexplode("grams").alias("pos", "gram"),
+    ).select(F.col(id_col), "_m", "pos", md5_long("gram").alias("h"))
+
+
 def winnow_fingerprints(
     df: DataFrame,
     text_col: str = "text",
@@ -313,23 +326,14 @@ def winnow_fingerprints(
     """
     from pyspark.sql import Window
 
-    grams = df.repartition(F.col(id_col)).select(
-        F.col(id_col),
-        ngrams(tokenize(F.lower(F.col(text_col))), k).alias("grams"),
-    ).select(
-        F.col(id_col),
-        F.size("grams").alias("_m"),
-        F.posexplode("grams").alias("pos", "gram"),
-    )
-    h = F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10).cast("long")
     win = (
         Window.partitionBy(id_col).orderBy("pos")
         .rowsBetween(Window.currentRow, w - 1)
     )
     return (
-        grams.select(
+        _hashed_grams(df, text_col, id_col, k).select(
             F.col(id_col), "_m", "pos",
-            F.min(h).over(win).alias("fingerprint"),
+            F.min("h").over(win).alias("fingerprint"),
         )
         .filter(F.col("pos") <= F.col("_m") - w)
         .select(id_col, "fingerprint")
@@ -635,17 +639,8 @@ def winnow_positions(
     """
     from pyspark.sql import Window
 
-    grams = df.repartition(F.col(id_col)).select(
-        F.col(id_col),
-        ngrams(tokenize(F.lower(F.col(text_col))), k).alias("grams"),
-    ).select(
-        F.col(id_col),
-        F.size("grams").alias("_m"),
-        F.posexplode("grams").alias("pos", "gram"),
-    )
-    h = F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10).cast("long")
     ww = Window.partitionBy(id_col).orderBy("pos")
-    cur = grams.select(F.col(id_col), "_m", "pos", h.alias("h"))
+    cur = _hashed_grams(df, text_col, id_col, k)
     left_run = F.lit(0)
     run = F.lit(True)
     for j in range(1, w):
@@ -838,15 +833,8 @@ def winnow_positions_robust(
 
     Returns (id, pos, fingerprint).
     """
-    grams = df.repartition(F.col(id_col)).select(
-        F.col(id_col),
-        ngrams(tokenize(F.lower(F.col(text_col))), k).alias("grams"),
-    ).select(
-        F.col(id_col),
-        F.posexplode("grams").alias("pos", "gram"),
-    )
-    h = F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10).cast("long")
-    hashed = grams.select(F.col(id_col), "pos", h.alias("h"))
+    hashed = _hashed_grams(df, text_col, id_col, k).select(
+        F.col(id_col), "pos", "h")
     window = w  # capture plain ints; the closure must be self-contained
 
     def scan(pdf):

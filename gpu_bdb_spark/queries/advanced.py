@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gpu_bdb_spark.functions import dec
+from gpu_bdb_spark.functions import dec, md5_long
 from gpu_bdb_spark.io import read_table
 from gpu_bdb_spark.queries.registry import register
 
@@ -465,11 +465,8 @@ def quantile_bins_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "lineitem",
                    ["l_extendedprice", "l_orderkey", "l_linenumber"],
                    hint_broadcast=False)
-    hn = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.col("l_orderkey"),
-                              F.col("l_linenumber"))), 1, 8),
-        16, 10).cast("long")
+    hn = md5_long(F.concat_ws(":", F.col("l_orderkey"),
+                              F.col("l_linenumber")))
     s = d.filter(hn < F.lit(1073741824))  # 16^8 / 4: keep ~1/4 of rows
     w = Window.orderBy("l_extendedprice", "l_orderkey", "l_linenumber")
     ranked = (
@@ -1174,9 +1171,7 @@ def bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def bit(i, key):
         return F.pmod(
-            F.conv(F.substring(
-                F.md5(F.concat(F.lit(f"b{i}:"), key.cast("string"))),
-                1, 8), 16, 10).cast("long"),
+            md5_long(F.concat(F.lit(f"b{i}:"), key.cast("string"))),
             F.lit(4096))
 
     bits = members.select(
@@ -1278,11 +1273,8 @@ def kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-sized work."""
     l = read_table(spark, sf_dir, "lineitem", ["l_partkey", "l_shipdate"],
                    hint_broadcast=False)
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("kmv:"),
-                           F.col("l_partkey").cast("string"))), 1, 12),
-        16, 10).cast("long")
+    h = md5_long(F.concat(F.lit("kmv:"), F.col("l_partkey").cast("string")),
+                 1, 12)
     yr = F.year("l_shipdate")
 
     def kmv(year):

@@ -22,6 +22,7 @@ from gpu_bdb_spark.operators.dedup import (
     minhash_lsh_pairs,
     shingle_sets,
     simhash64,
+    simhash64_portable,
     simhash_pairs,
 )
 from gpu_bdb_spark.queries.registry import register
@@ -1158,40 +1159,16 @@ FROM s
           tags=("dedup", "simhash", "portable"))
 def simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash with a PORTABLE md5 bit source — the
-    exactly-oracle-verified twin of `dedup_simhash`'s xxhash64 tier
-    (the minhash_portable pattern applied to the simhash family): same
-    explode → 64 conditional sums → bit assembly, every bit decided by
-    Σ±1 > 0 over the token multiset, fingerprint emitted as a 16-hex
-    string both engines format identically (%08x%08x of the two 32-bit
-    halves)."""
-    from functools import reduce as _reduce
-
-    from gpu_bdb_spark.functions import tokenize
-
+    exactly-oracle-verified twin of `dedup_simhash`'s xxhash64 tier:
+    `simhash64_portable`'s fingerprint emitted as a 16-hex string both
+    engines format identically (%08x%08x of the two 32-bit halves)."""
     d = read_table(spark, sf_dir, "documents", ["doc_id", "text"],
                    hint_broadcast=False)
-    t = d.select(F.col("doc_id").alias("id"),
-                 F.explode(tokenize("text")).alias("token"))
-    h1 = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long")
-    h2 = F.conv(F.substring(F.md5("token"), 9, 8), 16, 10).cast("long")
-    aggs = [
-        F.sum(
-            F.when(
-                F.shiftright(h1 if j < 32 else h2,
-                             j if j < 32 else j - 32)
-                .bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{j}")
-        for j in range(64)
-    ]
-    per_doc = t.groupBy("id").agg(*aggs)
-    lo = _reduce(lambda x, y: x + y, [
-        F.when(F.col(f"b{j}") > 0, F.lit(1 << j).cast("long"))
-        .otherwise(F.lit(0).cast("long")) for j in range(32)])
-    hi = _reduce(lambda x, y: x + y, [
-        F.when(F.col(f"b{j}") > 0, F.lit(1 << (j - 32)).cast("long"))
-        .otherwise(F.lit(0).cast("long")) for j in range(32, 64)])
-    return per_doc.select(
-        "id", F.format_string("%08x%08x", hi, lo).alias("simhash_hex"))
+    sh = F.col("simhash")
+    return simhash64_portable(d, "text", "doc_id").select(
+        "id", F.format_string("%08x%08x", F.shiftrightunsigned(sh, 32),
+                              sh.bitwiseAND(F.lit(0xFFFFFFFF)))
+        .alias("simhash_hex"))
 
 
 def _simhash_pairs_auto_oracle() -> str:
@@ -1262,7 +1239,6 @@ def simhash_pairs_auto_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     popcount cut. Both arms emit the identical pair set, so the
     dispatch can only change the plan shape — arm choice is pinned on
     planted fixtures in test_skew.py."""
-    from gpu_bdb_spark.operators.dedup import simhash64_portable
     from gpu_bdb_spark.operators.skew import simhash_pairs_auto
 
     d = read_table(spark, sf_dir, "documents", ["doc_id", "text"],

@@ -724,7 +724,7 @@ def corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents",
                    ["doc_id", "lang", "source", "text"],
                    hint_broadcast=False)
-    toks = F.size(tokenize(F.col("text"))).alias("n_tokens")
+    toks = F.array_size(tokenize(F.col("text"))).alias("n_tokens")
     t = d.select("lang", "source", fingerprint(F.col("text")).alias("fp"),
                  toks)
     return t.agg(
@@ -970,7 +970,7 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio is an IEEE expression of exact integers rounded 1e-6 once,
     per-doc scores are DECIMAL sums of those quantized ratios
     (order-independent), the top-50 cut breaks ties by doc_id."""
-    from gpu_bdb_spark.functions import tokenize
+    from gpu_bdb_spark.functions import md5_long, tokenize
     from gpu_bdb_spark.operators.text import ngrams
 
     d = read_table(spark, sf_dir, "documents", ["doc_id", "text"],
@@ -980,11 +980,8 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(ngrams(tokenize("text"), 2)).alias("bg"),
     ).select(
         "doc_id",
-        F.pmod(
-            F.conv(F.substring(F.md5(F.concat(F.lit("dsir:"),
-                                              F.col("bg"))), 1, 8),
-                   16, 10).cast("long"),
-            F.lit(256)).alias("b"),
+        F.pmod(md5_long(F.concat(F.lit("dsir:"), F.col("bg"))),
+               F.lit(256)).alias("b"),
     )
     bc = gb.groupBy("b").agg(
         F.count(F.lit(1)).cast("long").alias("cr"),

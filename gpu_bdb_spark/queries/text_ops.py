@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gpu_bdb_spark.functions import tokenize
+from gpu_bdb_spark.functions import md5_long, tokenize
 from gpu_bdb_spark.io import read_table
 from gpu_bdb_spark.operators.text import (
     LANG_MARKERS,
@@ -1180,13 +1180,9 @@ def mask_tokens_mlm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.posexplode(toks).alias("pos", "token"))
     hit = (
         F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(
-                        ":", F.lit("mlm"),
-                        F.col("doc_id").cast("string"),
-                        F.col("pos").cast("string"))), 1, 8),
-                16, 10).cast("long"),
+            md5_long(F.concat_ws(
+                ":", F.lit("mlm"), F.col("doc_id").cast("string"),
+                F.col("pos").cast("string"))),
             F.lit(100),
         ) < 15
     )

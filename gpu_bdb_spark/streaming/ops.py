@@ -605,13 +605,13 @@ def bloom_ingest_batches(
     """
     from pyspark.sql import functions as F
 
+    from gpu_bdb_spark.functions import md5_long
+
     def bits_of(df: DataFrame) -> DataFrame:
         pos = [
             F.pmod(
-                F.conv(F.substring(
-                    F.md5(F.concat(F.lit(f"b{i}:"),
-                                   F.col(key_col).cast("string"))),
-                    1, 8), 16, 10).cast("long"),
+                md5_long(F.concat(F.lit(f"b{i}:"),
+                                  F.col(key_col).cast("string"))),
                 F.lit(int(n_bits)))
             for i in range(int(n_hashes))
         ]

@@ -128,19 +128,31 @@ _SEPARATORS = st.sampled_from([" ", "\x0B", "\u00a0", "\u2028"]) | st.text(
     n=st.sampled_from([1, 2, 3]),
 )
 @settings(**{**SETTINGS, "max_examples": 8})
-def test_shingle_sets_matches_re2_reference(spark, docs, n):
-    r"""shingle_sets splits on RE2's `\s` class and nothing else; NULL,
-    empty, and too-short docs get no row."""
+@pytest.mark.parametrize("producer", ["shingle_sets", "tokenize"])
+def test_shingle_sets_matches_re2_reference(spark, producer, docs, n):
+    r"""Both token producers split on RE2's `\s` class and nothing else:
+    `shingle_sets` (NULL, empty, and too-short docs get no row) and
+    `explode(tokenize(text))` (n unused)."""
+    from gpu_bdb_spark.functions import tokenize
     from gpu_bdb_spark.operators.dedup import shingle_sets
 
-    want = {}
-    for i, text in enumerate(docs):
-        toks = [t for t in _RE2_SPACE.split(text or "") if t]
-        grams = {" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)}
-        if grams:
-            want[i] = grams
+    toks = {i: [t for t in _RE2_SPACE.split(text or "") if t]
+            for i, text in enumerate(docs)}
     df = spark.createDataFrame(list(enumerate(docs)),
                                "doc_id long, text string")
+    if producer == "tokenize":
+        got = {}
+        for r in df.select("doc_id", F.explode(tokenize("text"))
+                           .alias("tok")).collect():
+            got.setdefault(r.doc_id, []).append(r.tok)
+        assert {i: sorted(g) for i, g in got.items()} == {
+            i: sorted(t) for i, t in toks.items() if t}
+        return
+    want = {}
+    for i, t in toks.items():
+        grams = {" ".join(t[j:j + n]) for j in range(len(t) - n + 1)}
+        if grams:
+            want[i] = grams
     got = {r.id: (set(r.shingles), r.n_shingles, len(r.shingles))
            for r in shingle_sets(df, "text", "doc_id", n=n).collect()}
     assert got == {i: (g, len(g), len(g)) for i, g in want.items()}
